@@ -118,6 +118,12 @@ _DRIVER_PRIORITY = [
     "tx_stratified_sample", "tx_tfidf_topk", "udtf_bigram_expand",
     "x84_twap", "x85_event_paths", "x86_merkle_diff", "x87_window_dedup",
 ]
+# m12_fixture_verdicts registers only where the reference checkout's
+# fixture files exist (plans/merge_plans.py).  It sits past the 50-slot
+# window, so the sampled queries are the same either way.
+_DRIVER_PRIORITY = [n for n in _DRIVER_PRIORITY
+                    if n != "m12_fixture_verdicts"
+                    or n in merge_plans.QUERIES]
 
 
 

@@ -141,7 +141,7 @@ def tiered_jaccard_verify(cand: DataFrame, sets_a: DataFrame,
                           sets_b: DataFrame, min_jaccard: float,
                           a_col: str = "id_a",
                           b_col: str = "id_b",
-                          parts: int | None = None) -> DataFrame:
+                          b_first: bool = False) -> DataFrame:
     """Two-tier exact-Jaccard verify of candidate id pairs — the r13
     dd_containment/dd_ngram_jaccard int16 pattern, shared so every
     member of the MinHash hash family (``dd_incremental``,
@@ -162,26 +162,22 @@ def tiered_jaccard_verify(cand: DataFrame, sets_a: DataFrame,
     array sides: shuffle_hash hints, never AQE-broadcast (see
     ``minhash_lsh_pairs``).
 
-    ``parts`` (r15, guide §2.2): pins the verify's exchange sizes to a
-    bytes-derived count in the tiny-data regime where per-task
-    constants dominate (``sizing.small_exchange_parts``); ``None``
-    (every at-scale regime) keeps the session-partitioned plan.  The
-    mechanics are partitioning-PROPAGATION, not blanket repartition:
-    EnsureRequirements re-shuffles an exchange-rooted join child whose
-    user count sits below ``spark.sql.shuffle.partitions`` back up to
-    the conf (measured r15; the co-partitioning bestSpec filter), but
-    ACCEPTS a small partitioning that is established below a
-    non-exchange operator — so callers pin the CANDIDATE stream by
-    repartitioning on ``a_col`` before their dedup aggregation (the
-    agg rides the pinned exchange and its output partitioning pulls
-    the first join, and the first join's side, down with it), and the
-    tier-2 joins are ordered b-then-a so the first rides tier 1's
-    output partitioning outright (one fewer exchange of the survivor
-    stream at ANY parts, but only taken on the pinned path to keep the
-    at-scale plan byte-identical to r14's proven shape).  Values are
-    partition-count and join-order invariant (inner equi-joins; the
-    r15 A/B fingerprints both variants equal, and each caller's oracle
-    re-proves it)."""
+    The helper never repartitions: callers that pin the verify's
+    exchanges to a bytes-derived count (``sizing.small_exchange_parts``)
+    pin the CANDIDATE stream by repartitioning on ``a_col`` before
+    their dedup aggregation.  The mechanics are partitioning-
+    PROPAGATION: EnsureRequirements re-shuffles an exchange-rooted join
+    child whose user count sits below ``spark.sql.shuffle.partitions``
+    back up to the conf (the co-partitioning bestSpec filter), but
+    ACCEPTS a small partitioning established below a non-exchange
+    operator — the agg rides the pinned exchange and its output
+    partitioning pulls the first join, and the first join's side, down
+    with it.  ``b_first`` orders the tier-2 joins b-then-a so the first
+    rides tier 1's output partitioning outright (one fewer exchange of
+    the survivor stream); the batch callers take it only on their
+    pinned path, keeping the at-scale plan byte-identical to the
+    proven a-first shape.  Values are partition-count and join-order
+    invariant (inner equi-joins; each caller's oracle re-proves it)."""
     # SQL expression STRINGS throughout (the r14 construction rule —
     # ~5 ms py4j RTT on this box makes wide Column chains build-bound);
     # parses to the identical expression trees the Column forms built.
@@ -206,7 +202,7 @@ def tiered_jaccard_verify(cand: DataFrame, sets_a: DataFrame,
             .join(proj16(sets_b, b_col, "b").hint("shuffle_hash"), b_col)
             .where(tier1)
             .select(a_col, b_col))
-    if parts:
+    if b_first:
         # tier-2 b-first: surv leaves tier 1 hash-partitioned by b_col,
         # so this join plans NO new exchange for the survivor stream
         return (surv
@@ -461,7 +457,7 @@ def banded_ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     # driver sample.
     sets = sig.select("id", "sids")
     return tiered_jaccard_verify(cand, sets, sets, min_jaccard,
-                                 parts=parts)
+                                 b_first=parts is not None)
 
 
 def containment_pairs(df: DataFrame, text_col: str = "text",

@@ -2126,7 +2126,7 @@ def dd_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets_new = per_new.select("id", "sids")
     return dd.tiered_jaccard_verify(cand, sets_new, sets_old, 0.1,
                                     a_col="id_new", b_col="id_old",
-                                    parts=parts)
+                                    b_first=parts is not None)
 
 
 QUERIES["dd_incremental"] = dd_incremental

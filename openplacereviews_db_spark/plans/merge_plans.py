@@ -15,6 +15,7 @@ the exact greedy assignment stays pinned by tests/test_merge.py.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -497,7 +498,14 @@ try:  # reference checkout optional: the engine stays self-contained
     from ..sources import ref_fixtures as _RF
 
     if _RF.fixtures_available():
+        _oracle = _m12_oracle()  # reads the fixtures: may raise
         QUERIES["m12_fixture_verdicts"] = m12_fixture_verdicts
-        ORACLES["m12_fixture_verdicts"] = _m12_oracle()
-except Exception:  # pragma: no cover - missing/corrupt fixture files
-    pass
+        ORACLES["m12_fixture_verdicts"] = _oracle
+    else:
+        logging.getLogger(__name__).info(
+            "m12_fixture_verdicts not registered: no fixture dir at %s",
+            _RF.MERGE_DIR)
+except Exception:  # pragma: no cover - corrupt fixture files
+    logging.getLogger(__name__).warning(
+        "m12_fixture_verdicts not registered: fixture files unreadable",
+        exc_info=True)

@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .functions.sizing import path_bytes
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -35,14 +37,7 @@ def driver_mem_for(sf_dir: str | None) -> str:
     env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if env:
         return env
-    mb = 0
-    if sf_dir and os.path.isdir(sf_dir):
-        for root, _dirs, files in os.walk(sf_dir):
-            for f in files:
-                try:
-                    mb += os.path.getsize(os.path.join(root, f)) // 2**20
-                except OSError:
-                    pass
+    mb = ((sf_dir and path_bytes(sf_dir)) or 0) // 2**20
     return f"{min(48, max(8, 8 * ((mb + 399) // 400)))}g"
 
 
@@ -110,16 +105,7 @@ def blockmgr_bytes(spark: SparkSession) -> int:
     (shuffle files + disk-persisted blocks)."""
     dirs = (spark.sparkContext._jvm.org.apache.spark.SparkEnv
             .get().blockManager().diskBlockManager().localDirs())
-    total = 0
-    for d in dirs:
-        root = d.getAbsolutePath()
-        for base, _subdirs, files in os.walk(root):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(base, f))
-                except OSError:
-                    pass
-    return total
+    return sum(path_bytes(d.getAbsolutePath()) or 0 for d in dirs)
 
 
 def release_shuffles(spark: SparkSession, settle_s: float = 20.0,

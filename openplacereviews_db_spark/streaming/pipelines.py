@@ -242,8 +242,20 @@ def _run_to_memory(agg: DataFrame, output_mode: str,
     1000-executor deployment sizes it to key cardinality ÷ target
     state-per-store.  Measured here (r9 interleaved A/B, sf0.1):
     st_stream_join 8.0 s at 32 stores → 3.1 s at 8, values identical.
-    The session conf is restored after start (the started query keeps
-    the value it planned with)."""
+
+    This is the package's one write to the CALLER's
+    ``spark.sql.shuffle.partitions``, restored once the run finishes:
+    the state-store count is read when batch 0 plans on the stream
+    thread, after start() returns, from the stream's clone of the
+    caller's session, so nothing the caller's thread can reach sets it
+    in time except the caller's own conf (a foreachBatch body, by
+    contrast, sets its own batch session — ``_neardup_batch``).  A
+    second session is no cheaper fix: ``spark.newSession()`` drops the
+    caller's runtime confs (the UTC timezone, ``nanosAsLong``); a
+    stream started on a ``cloneSession()`` copy is invisible to
+    StreamingQueryListeners registered on the caller's session; and
+    each such stream leaves two listeners behind on the SparkContext
+    listener bus."""
     spark = agg.sparkSession
     _SINK_SEQ[0] += 1
     name = f"st_sink_{_SINK_SEQ[0]}"
@@ -364,126 +376,6 @@ def user_totals_once(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("s.total_millis").alias("total_millis"))
 
 
-def _stage_time_nsplit(sf_dir: str, prefix: str, n: int) -> tuple[str, str]:
-    """Write-once staging of the EVENTS table as ``n`` chronological
-    parquet files (equal-count ts ranges, strict ``<`` cuts so equal
-    timestamps never straddle a boundary) plus one FLUSH file holding a
-    single sentinel event (user_id = -1) at max(ts) + gap + 1 h — the
-    production-shaped feed for watermark-bounded session state: each
-    micro-batch advances the watermark past the previous batch's
-    sessions, and the sentinel closes the final ones so append mode
-    emits every session.  Cache keyed on source mtime+size (the s17
-    rule); ts pre-normalized to epoch-micros BIGINT like
-    ``_stage_time_split``."""
-    import os
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src_parquet)
-    tag = (f"v1n{n}_{os.path.basename(os.path.normpath(sf_dir))}"
-           f"_{int(st.st_mtime)}_{st.st_size}")
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"{prefix}_{tag}")
-    src = os.path.join(root, "src")
-    if not _stage_is_complete(root):
-        import shutil as _sh
-        _sh.rmtree(src, ignore_errors=True)
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        import numpy as np
-
-        t = pq.read_table(src_parquet, columns=["event_id", "user_id", "ts"])
-        ts_us = pc.cast(pc.cast(t["ts"], pa.timestamp("us"), safe=False),
-                        pa.int64())
-        t = t.drop_columns(["ts"]).append_column("ts_us", ts_us)
-        # numpy sort, not a python list — the sf100 probe stages 100M
-        # timestamps and a pylist sort is minutes + ~8 GB
-        sorted_ts = np.sort(ts_us.to_numpy())
-        cuts = [int(sorted_ts[(len(sorted_ts) * i) // n])
-                for i in range(1, n)]
-        cuts = sorted(set(cuts)) + [int(sorted_ts[-1]) + 1]
-        os.makedirs(src, exist_ok=True)
-        paths, lo = [], None
-        for i, hi in enumerate(cuts):
-            mask = pc.less(t["ts_us"], hi)
-            if lo is not None:
-                mask = pc.and_(mask, pc.greater_equal(t["ts_us"], lo))
-            p = os.path.join(src, f"{i:05d}_batch.parquet")
-            pq.write_table(t.filter(mask), p)
-            paths.append(p)
-            lo = hi
-        flush = pa.table({
-            "event_id": pa.array([-1], pa.int64()),
-            "user_id": pa.array([-1], pa.int64()),
-            "ts_us": pa.array([sorted_ts[-1] + (30 + 60) * 60 * 1_000_000],
-                              pa.int64()),
-        })
-        p = os.path.join(src, f"{len(cuts):05d}_flush.parquet")
-        pq.write_table(flush, p)
-        paths.append(p)
-        _pin_batch_order(*paths)
-        _mark_stage_complete(root, tag)
-    else:
-        _prune_stale_stage(root, tag)  # cache hit: age out leftovers
-    return root, src
-
-
-def sessionize_bounded_once(spark: SparkSession, sf_dir: str,
-                            n_batches: int = 4,
-                            sink_dir: str | None = None) -> DataFrame:
-    """st_sessionize with WATERMARK-BOUNDED per-batch state — the
-    production shape of the r10 heap finding (BASELINE: one availableNow
-    micro-batch pushed the whole sf10 corpus's ~10M session rows through
-    the state stores and GC-killed an 8 GiB JVM; a real feed never sees
-    the corpus in one batch).  The events table streams as ``n_batches``
-    chronological micro-batches with a 0-second watermark: the strict
-    time cuts make nothing late, each batch evicts every session that
-    closed before the previous batch's max ts, and the sentinel flush
-    batch closes the rest — so APPEND mode emits exactly the sessions of
-    the one-shot complete-mode run (pytest-pinned), while state never
-    holds more than one time-slice of open sessions.
-
-    ``sink_dir`` routes the emitted sessions to a parquet file sink
-    (the at-scale path: a memory sink would re-buffer every session on
-    the driver and defeat the bound); default is the memory sink used
-    by the other driver-checkable streams."""
-    import os
-    import shutil
-
-    root, src = _stage_time_nsplit(sf_dir, "sessbnd", n_batches)
-    ev = (spark.readStream.format("parquet")
-          .schema("event_id long, user_id long, ts_us long")
-          .option("maxFilesPerTrigger", 1).load(src)
-          .withColumn("ts", F.timestamp_micros("ts_us")))
-    agg = (ev.withWatermark("ts", "0 seconds")
-           .groupBy(F.session_window("ts", "30 minutes").alias("s"),
-                    "user_id")
-           .agg(F.count(F.lit(1)).alias("n_events")))
-    if sink_dir is None:
-        out = _run_to_memory(agg, "append", state_partitions=8)
-    else:
-        chk = os.path.join(sink_dir, "_chk")
-        data = os.path.join(sink_dir, "data")
-        for d in (chk, data):
-            shutil.rmtree(d, ignore_errors=True)
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (agg.writeStream.format("parquet")
-                 .option("path", data).option("checkpointLocation", chk)
-                 .outputMode("append").trigger(availableNow=True).start())
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", before)
-        _LAST_STREAM_PROGRESS[0] = q.lastProgress
-        out = spark.read.parquet(data)
-    return (out.where(F.col("user_id") >= 0)
-            .select("user_id", F.col("s.start").alias("session_start"),
-                    F.col("s.end").alias("session_end"), "n_events"))
-
-
 def _stage_parity_split(sf_dir: str, prefix: str) -> tuple[str, str]:
     """Write-once staging of the documents corpus as TWO parquet files
     split on doc_id parity (batch_a = even, batch_b = odd), under a
@@ -580,33 +472,6 @@ def _pin_batch_order(*paths: str) -> None:
         os.utime(p, (base + i, base + i))
 
 
-def _batch_shuffle_partitions(spark: SparkSession, src: str) -> int:
-    """Size the per-micro-batch shuffles of a foreachBatch stream to
-    the BATCH, not the session: each availableNow micro-batch here is
-    one staged file, so the joins/groupBys inside the batch body want
-    partitions derived from that file's bytes (~64 MB/partition
-    target, floor 8) rather than the session's corpus-sized setting —
-    the foreachBatch analog of the r9 state-store sizing
-    (``_run_to_memory`` ``state_partitions``; measured r14 interleaved
-    A/B at sf0.1: st_neardup_pairs 7.2 -> 6.1 s, values identical).
-    ``SPARK_GRAFT_STREAM_SHUFFLE`` overrides for cluster deployments
-    where the per-batch volume is known better than a file size."""
-    import math
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        return int(env)
-    try:
-        biggest = max((os.path.getsize(os.path.join(src, f))
-                       for f in os.listdir(src)
-                       if not f.startswith((".", "_"))), default=0)
-    except OSError:
-        biggest = 0
-    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(8, min(session, math.ceil(biggest / (64 * 2 ** 20))))
-
-
 def neardup_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X19 run to completion as a driver-checkable query: the documents
     corpus is staged as TWO parquet files (write-once per sf, split on
@@ -625,6 +490,8 @@ def neardup_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
+    from ..functions.sizing import path_bytes, small_exchange_parts
+
     root, src = _stage_parity_split(sf_dir, "neardup")
     index_dir = os.path.join(root, "index")
     chk_dir = os.path.join(root, "chk")
@@ -636,28 +503,23 @@ def neardup_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (spark.readStream.format("parquet").schema(schema)
             .option("maxFilesPerTrigger", 1).load(src)
             .where(F.length("text") > 0))
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(_batch_shuffle_partitions(spark, src)))
-    try:
-        q = neardup_dedup_stream(
-            docs, index_dir, chk_dir, pairs_dir,
-            shingle_words=2, num_hashes=16, bands=8,
-            min_jaccard=0.1).start()
-        # foreachBatch bodies plan per batch with the CURRENT conf —
-        # keep the batch-sized setting for the whole run, restore after
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    # each micro-batch is one staged file: size the batch bodies'
+    # exchanges to the largest one (64 MiB per partition), not to the
+    # session's corpus-sized count
+    biggest = max(os.path.getsize(os.path.join(src, f))
+                  for f in os.listdir(src) if f.endswith(".parquet"))
+    q = neardup_dedup_stream(
+        docs, index_dir, chk_dir, pairs_dir,
+        shingle_words=2, num_hashes=16, bands=8, min_jaccard=0.1,
+        parts=small_exchange_parts(spark, biggest, 64 << 20)).start()
+    q.awaitTermination()
     pairs = spark.read.parquet(pairs_dir)
     lo = F.least("id_a", "id_b")
     hi = F.greatest("id_a", "id_b")
     canon = pairs.select(lo.alias("id_a"), hi.alias("id_b"), "jaccard")
-    # pin the readback-dedup exchange to a bytes-derived count: it runs
-    # AFTER the batch-sized conf is restored, so a bare dropDuplicates
-    # pays session-count task constants on a few thousand pairs (r15
-    # item 2; hash(id_a) satisfies the (id_a, id_b) clustering)
-    from ..functions.sizing import path_bytes, small_exchange_parts
+    # pin the readback-dedup exchange to a bytes-derived count: a bare
+    # dropDuplicates pays session-count task constants on a few
+    # thousand pairs (hash(id_a) satisfies the (id_a, id_b) clustering)
     parts = small_exchange_parts(spark, path_bytes(pairs_dir))
     if parts:
         canon = canon.repartition(parts, "id_a")
@@ -667,7 +529,8 @@ def neardup_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 def neardup_dedup_stream(docs_stream: DataFrame, index_dir: str,
                          checkpoint_dir: str, pairs_dir: str,
                          shingle_words: int = 2, num_hashes: int = 16,
-                         bands: int = 8, min_jaccard: float = 0.5):
+                         bands: int = 8, min_jaccard: float = 0.5,
+                         parts: int | None = None):
     """Incremental near-duplicate detection: each micro-batch of incoming
     documents is checked against a persistent MinHash band index (and
     against itself), verified with exact Jaccard, then merged into the
@@ -695,19 +558,28 @@ def neardup_dedup_stream(docs_stream: DataFrame, index_dir: str,
     ``epoch < current``, so a replayed micro-batch is an exact no-op
     instead of a double-append.  Verified pairs land in
     ``pairs_dir/epoch=<id>`` the same way.
+
+    ``parts`` sizes each batch's exchanges (``sizing.small_exchange_parts``
+    of the batch bytes); ``None`` keeps the session count.
     """
     on_batch = _neardup_batch(index_dir, pairs_dir, shingle_words,
-                              num_hashes, bands, min_jaccard)
+                              num_hashes, bands, min_jaccard, parts)
     return (docs_stream.writeStream.foreachBatch(on_batch)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True))
 
 
 def _neardup_batch(index_dir: str, pairs_dir: str, shingle_words: int,
-                   num_hashes: int, bands: int, min_jaccard: float):
+                   num_hashes: int, bands: int, min_jaccard: float,
+                   parts: int | None = None):
     """The foreachBatch body of :func:`neardup_dedup_stream`, exposed so
     tests can kill-restart the stream around it (the exactly-once
-    offset-log replay check, mirroring ``_exact_dedup_batch``)."""
+    offset-log replay check, mirroring ``_exact_dedup_batch``).
+
+    ``parts`` is set as ``spark.sql.shuffle.partitions`` on the BATCH's
+    session: the stream runs in its own clone of the caller's session
+    (AQE and every other conf inherited when it starts), so the
+    setting sizes this stream's exchanges and never reaches the caller."""
     import os
 
     from ..functions import hashing as H
@@ -729,17 +601,17 @@ def _neardup_batch(index_dir: str, pairs_dir: str, shingle_words: int,
         # for survivors + bypasses only; shuffle_hash inside the
         # helper keeps AQE from broadcast-converting either array side
         # (the dd_minhash_lsh sf10 OOM class, operators/dedup.py).
-        # parts = the batch-derived session count (r15): takes the
-        # helper's tier-2 b-first path, whose first join rides tier
-        # 1's output partitioning — one fewer survivor-stream exchange
-        # per micro-batch at every scale, values join-order invariant
-        spark = cand.sparkSession
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        # b_first: the candidate stream is repartitioned on id_a below,
+        # so tier 2's first join rides tier 1's output partitioning —
+        # one fewer survivor-stream exchange per micro-batch at every
+        # scale, values join-order invariant
         return tiered_jaccard_verify(cand, sets, sets, min_jaccard,
-                                     parts=parts)
+                                     b_first=True)
 
     def on_batch(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
+        if parts:
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         epoch = int(epoch_id)
         state_part = os.path.join(state_dir, f"epoch={epoch}")
         pairs_part = os.path.join(pairs_dir, f"epoch={epoch}")

@@ -128,7 +128,8 @@ def test_no_fact_table_broadcast(name, spark, sf_dir):
     walk(root, False)
 
 
-@pytest.mark.parametrize("name,min_shj", [
+#: (query, minimum ShuffledHashJoin count) for the exact-verify audit
+VERIFY_MIN_SHJ = [
     # dd_minhash_lsh verifies INLINE in the band self-join (r11 shape,
     # re-pinned by the r14 sf100 A/B: 563 s / 16.6 GB vs the in-band
     # int16 tier variant's 915-1062 s / 17.7-19.7 GB — one shuffle_hash
@@ -141,7 +142,10 @@ def test_no_fact_table_broadcast(name, spark, sf_dir):
     ("dd_ngram_jaccard", 4),
     ("dd_containment", 4),
     ("dd_incremental", 4),
-])
+]
+
+
+@pytest.mark.parametrize("name,min_shj", VERIFY_MIN_SHJ)
 def test_verify_joins_never_broadcast(name, min_shj, spark, sf_dir):
     """The exact-verify joins ship CORPUS-sized shingle-set array
     payloads.  AQE broadcast-converts them at mid scale — at sf10
@@ -174,6 +178,24 @@ def test_verify_joins_never_broadcast(name, min_shj, spark, sf_dir):
             assert not attr.search(line), (
                 f"{name}: array-payload verify side broadcast: {line}"
             )
+
+
+@pytest.mark.parametrize("name,min_shj", VERIFY_MIN_SHJ)
+def test_verify_joins_never_broadcast_pinned(name, min_shj, spark,
+                                             sf_dir):
+    """The same audit in the pinned regime.  The 8-partition test
+    session sits at small_exchange_parts' floor, so the plain audit
+    only sees the unpinned plans; at 32 session partitions (the
+    32-core bench shape) the sf0.001 corpus pins the verify exchanges,
+    and their shuffle_hash hints must survive that plan too."""
+    from openplacereviews_db_spark.plans import corpus
+
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        assert corpus._docs_parts(spark, sf_dir) == 8  # pinning engaged
+        test_verify_joins_never_broadcast(name, min_shj, spark, sf_dir)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
 
 
 #: builders whose CONSTRUCTION legitimately executes Spark jobs:

@@ -1,16 +1,16 @@
-"""r15 item 1: bytes-derived per-exchange partition pinning.
+"""Bytes-derived per-exchange partition pinning (functions/sizing.py).
 
-Pins (a) the sizing formula (floor / cap-to-None / env override) and
+Pins (a) the sizing formula (floor / cap-to-None against the session
+count, the 64 MiB micro-batch target, fail-safe on a missing path) and
 (b) value-invariance of the pinned plan paths: `tiered_jaccard_verify`
-and `containment_pairs` must return identical rows with `parts` set
-and unset — the pinned path also flips the tier-2 join order (b-first
-rides tier 1's output partitioning), so this is the join-order
-equivalence pin too.
+must return identical rows with `b_first` set and unset, and
+`containment_pairs` with `parts` set and unset — the pinned path also
+flips the tier-2 join order (b-first rides tier 1's output
+partitioning), so this is the join-order equivalence pin too.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 from openplacereviews_db_spark.functions import sizing
@@ -18,31 +18,77 @@ from openplacereviews_db_spark.operators.dedup import (containment_pairs,
                                                        tiered_jaccard_verify)
 
 
-def test_small_exchange_parts_floor_cap_env(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_VERIFY_SHUFFLE", raising=False)
+def _at_session_parts(spark, n):
+    """Set the session's shuffle partition count for a sizing case."""
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+
+
+def test_small_exchange_parts_floor_cap(spark):
     # the test session runs at 8 shuffle partitions == the floor, so
-    # the floor correctly collapses to None here (floor >= session
+    # the floor correctly collapses to None there (floor >= session
     # means pinning buys nothing); exercise the formula against a
-    # temporarily raised session count instead
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    # temporarily raised session count as well
     try:
+        _at_session_parts(spark, 32)
         # tiny input -> floor
         assert sizing.small_exchange_parts(spark, 10_000) == 8
+        assert sizing.small_exchange_parts(spark, 0) == 8
         # ~16 MiB -> 16 partitions (below the session cap)
         assert sizing.small_exchange_parts(spark, 16 << 20) == 16
         # at/above the session count -> None (keep the session plan:
         # at-scale regime, AQE skew-split stays available)
         assert sizing.small_exchange_parts(spark, 33 << 20) is None
         assert sizing.small_exchange_parts(spark, 10 << 40) is None
+        # a larger session count moves the cap, not the formula
+        _at_session_parts(spark, 64)
+        assert sizing.small_exchange_parts(spark, 33 << 20) == 33
+        # below the floor -> None at any size
+        _at_session_parts(spark, 4)
+        assert sizing.small_exchange_parts(spark, 10_000) is None
+        assert sizing.small_exchange_parts(spark, 10 << 40) is None
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        _at_session_parts(spark, 8)
     # floor >= session -> None
     assert sizing.small_exchange_parts(spark, 10_000) is None
-    # env override: explicit count wins; 0 disables pinning outright
-    monkeypatch.setenv("SPARK_GRAFT_VERIFY_SHUFFLE", "12")
-    assert sizing.small_exchange_parts(spark, 10_000) == 12
-    monkeypatch.setenv("SPARK_GRAFT_VERIFY_SHUFFLE", "0")
-    assert sizing.small_exchange_parts(spark, 10_000) is None
+
+
+def test_small_exchange_parts_micro_batch_target(spark):
+    """The 64 MiB-per-partition target sizes the near-dup stream's
+    micro-batches: for a session of S >= 8 partitions the pinned count
+    (or S when unpinned) is max(8, min(S, ceil(bytes / 64 MiB)))."""
+    mib64 = 64 << 20
+    try:
+        _at_session_parts(spark, 32)
+        assert sizing.small_exchange_parts(spark, 1 << 20, mib64) == 8
+        assert sizing.small_exchange_parts(spark, 8 * mib64, mib64) == 8
+        assert sizing.small_exchange_parts(spark, 10 * mib64, mib64) == 10
+        assert sizing.small_exchange_parts(spark, 32 * mib64,
+                                           mib64) is None
+        for s in (8, 12, 32):
+            _at_session_parts(spark, s)
+            for nbytes in (0, 5 * mib64, 9 * mib64 + 1, 40 * mib64):
+                c = -(-nbytes // mib64)
+                got = sizing.small_exchange_parts(spark, nbytes, mib64)
+                assert (got or s) == max(8, min(s, c)), (s, nbytes)
+    finally:
+        _at_session_parts(spark, 8)
+
+
+def test_missing_path_keeps_session_plan(spark, tmp_path):
+    """Sizing fails safe: a missing path has no size, and no size keeps
+    the unpinned (session-partitioned) plan — never the 8-partition
+    floor a silent 0 would give."""
+    missing = str(tmp_path / "nope")
+    assert sizing.path_bytes(missing) is None
+    assert sizing.table_bytes(str(tmp_path), "documents") is None
+    assert sizing.path_bytes(str(tmp_path)) == 0  # empty dir is a size
+    try:
+        _at_session_parts(spark, 32)
+        assert sizing.small_exchange_parts(spark, None) is None
+        assert sizing.small_exchange_parts(
+            spark, sizing.path_bytes(missing)) is None
+    finally:
+        _at_session_parts(spark, 8)
 
 
 def test_table_bytes_file_and_dir(tmp_path):
@@ -71,7 +117,7 @@ def test_tiered_verify_parts_value_invariant(spark, _verify_inputs):
     cand, sets = _verify_inputs
     base = tiered_jaccard_verify(cand, sets, sets, 0.5).collect()
     pinned = tiered_jaccard_verify(cand, sets, sets, 0.5,
-                                   parts=4).collect()
+                                   b_first=True).collect()
     key = lambda r: (r["id_a"], r["id_b"], r["jaccard"])  # noqa: E731
     assert sorted(map(key, base)) == sorted(map(key, pinned))
     assert base  # non-vacuous: at least one verified pair survives

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from openplacereviews_db_spark.streaming import pipelines as SP
 
 
@@ -1006,36 +1008,61 @@ def test_neardup_batch_epoch_layout_and_replay(spark, tmp_path):
     assert spark.read.parquet(index_dir + "/state").count() == 3
 
 
-def test_sessionize_bounded_equals_one_shot(spark):
-    """r10 verdict item 5: the watermark-bounded multi-batch harness
-    must produce EXACTLY the one-shot complete-mode sessions — proving
-    "a real feed never sees the corpus in one batch" with an executed
-    run: >2 chronological micro-batches, 0-second watermark (strict
-    time cuts make nothing late), sentinel flush closing the tail.
-    After the flush batch, the state store must be empty but for the
-    sentinel's own open session — per-batch state is time-slice-sized,
-    never corpus-sized (the sf10 8 GiB GC-death class)."""
-    sf = "/root/testdata/sf0.001"
-    cols = ("user_id", "session_start", "session_end", "n_events")
-    bounded = sorted(tuple(r[c] for c in cols) for r in
-                     SP.sessionize_bounded_once(spark, sf, 4).collect())
-    prog = SP._LAST_STREAM_PROGRESS[0]
-    assert prog["batchId"] >= 3  # 4 time slices + flush, minus 0-index
-    state = prog["stateOperators"][0]
-    assert state["numRowsTotal"] <= 2, state  # evicted, not accumulated
-    one_shot = sorted(tuple(r[c] for c in cols) for r in
-                      SP.sessionize_once(spark, sf).collect())
-    assert len(bounded) > 0 and bounded == one_shot
+def _watch_neardup_batches(monkeypatch, spark, fail=False):
+    """Wrap every _neardup_batch body built from here on: after each
+    batch, record (caller's, batch session's) shuffle partitions;
+    ``fail`` makes the first batch raise once its body has run."""
+    key = "spark.sql.shuffle.partitions"
+    seen = []
+    real = SP._neardup_batch
+
+    def build(*args, **kwargs):
+        inner = real(*args, **kwargs)
+
+        def on_batch(batch, epoch_id):
+            inner(batch, epoch_id)
+            seen.append((spark.conf.get(key),
+                         batch.sparkSession.conf.get(key)))
+            if fail:
+                raise RuntimeError("injected batch failure")
+        return on_batch
+
+    monkeypatch.setattr(SP, "_neardup_batch", build)
+    return seen
 
 
-def test_sessionize_bounded_parquet_sink(spark, tmp_path):
-    """The at-scale sink path (parquet file sink, driver never buffers
-    the emitted sessions) produces the same rows as the memory sink."""
-    sf = "/root/testdata/sf0.001"
-    cols = ("user_id", "session_start", "session_end", "n_events")
-    mem = sorted(tuple(r[c] for c in cols) for r in
-                 SP.sessionize_bounded_once(spark, sf, 3).collect())
-    fs = sorted(tuple(r[c] for c in cols) for r in
-                SP.sessionize_bounded_once(
-                    spark, sf, 3, sink_dir=str(tmp_path)).collect())
-    assert len(fs) > 0 and fs == mem
+def test_neardup_once_leaves_caller_conf(spark, sf_dir, monkeypatch):
+    """neardup_once sizes its micro-batches on the stream's own session:
+    with the caller at 32 partitions, the caller's conf stays 32 during
+    and after the run while each batch body plans at the sf0.001
+    batch-derived 8 — and the pairs equal the 8-partition session's."""
+    key = "spark.sql.shuffle.partitions"
+    cols = ("id_a", "id_b", "jaccard")
+    want = sorted(tuple(r[c] for c in cols) for r in
+                  SP.neardup_once(spark, sf_dir).collect())
+    seen = _watch_neardup_batches(monkeypatch, spark)
+    spark.conf.set(key, "32")
+    try:
+        got = sorted(tuple(r[c] for c in cols) for r in
+                     SP.neardup_once(spark, sf_dir).collect())
+        assert spark.conf.get(key) == "32"
+    finally:
+        spark.conf.set(key, "8")
+    assert seen == [("32", "8"), ("32", "8")]
+    assert len(got) > 0 and got == want
+
+
+def test_neardup_once_failure_leaves_caller_conf(spark, sf_dir,
+                                                 monkeypatch):
+    """The same guarantee when a batch body raises: the stream fails,
+    and the caller's conf is still untouched."""
+    key = "spark.sql.shuffle.partitions"
+    seen = _watch_neardup_batches(monkeypatch, spark, fail=True)
+    spark.conf.set(key, "32")
+    try:
+        with pytest.raises(Exception, match="injected batch failure"):
+            SP.neardup_once(spark, sf_dir)
+        assert spark.conf.get(key) == "32"
+    finally:
+        spark.conf.set(key, "8")
+    assert seen == [("32", "8")]
