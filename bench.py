@@ -23,7 +23,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from openplacereviews_db_spark.session import get_spark
+    from openplacereviews_db_spark.session import drop_cached_blocks, get_spark
     import __spark_entry__ as entrymod
 
     # Co-tenant load context (CLAUDE.md rule: no single-run timing is
@@ -71,15 +71,7 @@ def main() -> None:
     import gc
 
     def drop_retained_blocks() -> None:
-        # clearCache only empties the catalog cache; localCheckpoint /
-        # persist blocks of finished queries stay in the block manager
-        # and 90+ queries in one JVM accumulate heap + GC pressure —
-        # unpersist every retained RDD explicitly
-        spark.catalog.clearCache()
-        it = (spark.sparkContext._jsc.sc()
-              .getPersistentRDDs().values().iterator())
-        while it.hasNext():
-            it.next().unpersist(False)
+        drop_cached_blocks(spark)
         gc.collect()
 
     # Codegen warmup: run every query once at the SMALLEST sf before

@@ -5,17 +5,16 @@ Spark SQL *and* in the DuckDB oracle SQL (both expose ``md5(text) → hex``),
 making every sketch hash-checkable cross-engine.  All of it is column
 arithmetic — no Python UDFs.
 
-- ``char_shingles``  — k-character shingles of normalized text
 - ``word_shingles``  — n-word shingles
 - ``minhash_base`` / ``minhash_perm`` — the minhash family: ONE md5
                         base hash per shingle fed through k universal-
                         hash permutations (a_i·h+b_i mod 2^61−1) —
                         integer arithmetic both engines compute
                         bit-identically
-- ``minhash_sig``    — the array-HOF expression form of that family
 - ``lsh_bands``      — banding of the signature for LSH candidate buckets
-- ``simhash64``      — 64-bit SimHash over word tokens (bit-majority of
-                        per-token md5 bits)
+- ``jaccard`` / ``jaccard_ge`` / ``jaccard_prebound`` — set similarity
+                        and its exact threshold tests
+- ``hamming64``      — Hamming distance between two SimHash values
 - ``fingerprint``    — md5 of whitespace/case-normalized text (rolling-hash
                         analog for exact-after-normalization dedup)
 """
@@ -64,21 +63,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     )
 
 
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """array<string> of k-char shingles of the normalized text (distinct);
-    texts shorter than ``k`` chars yield a single whole-text shingle and
-    empty text yields an empty array."""
-    t = norm_text(text)
-    ln = F.length(t)
-    idx = F.sequence(F.lit(1), ln - (k - 1))
-    full = F.transform(idx, lambda i: t.substr(i, F.lit(k)))
-    return F.array_distinct(
-        F.when(ln == 0, F.array().cast("array<string>"))
-        .when(ln < k, F.array(t))
-        .otherwise(full)
-    )
-
-
 #: MinHash universal-hash family h_i(s) = (a_i·base(s) + b_i) mod P over
 #: one shared base hash per shingle — ONE md5 per shingle instead of
 #: num_hashes of them (16× less hashing; at 100 TB the hash work IS the
@@ -122,18 +106,6 @@ def minhash_perm_sql(seed_expr: str, base_expr: str) -> str:
     (DuckDB generate_series), a_i/b_i inlined as the same formulas."""
     return (f"(((1000003 + 7919 * {seed_expr}) * {base_expr} "
             f"+ (12345 + 69061 * {seed_expr})) % {MINHASH_P})")
-
-
-def minhash_sig(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as array<bigint> of length ``num_hashes`` —
-    the array-HOF expression form of the family above (the exploded
-    aggregate form in ``operators.dedup`` is the production path)."""
-    def one(i: int) -> Column:
-        return F.array_min(
-            F.transform(shingles, lambda s: minhash_perm(i, minhash_base(s)))
-        )
-
-    return F.array(*[one(i) for i in range(num_hashes)])
 
 
 def lsh_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
@@ -248,62 +220,6 @@ def jaccard_prebound(inter_count: Column, size_a: Column, size_b: Column,
 
 
 # --- SimHash -----------------------------------------------------------------
-
-_HEX = "0123456789abcdef"
-
-
-def _hex_digit_val(c: Column) -> Column:
-    """hex char → 0..15 via position in the hex alphabet (portable SQL)."""
-    return F.instr(F.lit(_HEX), c) - 1
-
-
-def _md5_bits(h: Column, nbits: int) -> Column:
-    """array<int> of the first ``nbits`` bits of an md5 hex string,
-    most-significant first within each nibble."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(nbits - 1)),
-        lambda bit: (
-            F.floor(
-                _hex_digit_val(h.substr((bit / 4).cast("int") + 1, F.lit(1)))
-                / F.pow(F.lit(2.0), (F.lit(3) - bit % 4).cast("double"))
-            ) % 2
-        ).cast("int"),
-    )
-
-
-def simhash64(text: Column, prefix_bits: int = 64) -> Column:
-    """SimHash over word tokens, returned as a bigint column.
-
-    Single pass: the aggregate accumulator is an array of per-bit vote
-    counters (+1 when md5(token) has the bit set, −1 otherwise); the sign
-    of each counter is the output bit (ties → 0).  Pure column
-    arithmetic, one traversal of the token array.
-    """
-    words = F.array_distinct(F.filter(F.split(norm_text(text), " "), lambda w: w != ""))
-    zero = F.array_repeat(F.lit(0), prefix_bits)
-    votes = F.aggregate(
-        words,
-        zero,
-        lambda acc, w: F.zip_with(
-            acc, _md5_bits(F.md5(w), prefix_bits),
-            lambda a, bit: a + F.when(bit == 1, F.lit(1)).otherwise(F.lit(-1)),
-        ),
-    )
-    # weight of bit at position pos is 2^(prefix_bits-1-pos); the top bit of
-    # a 64-bit hash is the sign bit, added as -2^63 (two's complement)
-    weighted = F.zip_with(
-        votes,
-        F.sequence(F.lit(0), F.lit(prefix_bits - 1)),
-        lambda v, pos: F.when(v <= 0, F.lit(0).cast("bigint")).otherwise(
-            F.when(
-                F.lit(prefix_bits - 1) - pos == 63, F.lit(-(2 ** 63)).cast("bigint")
-            ).otherwise(
-                F.pow(F.lit(2.0), (F.lit(prefix_bits - 1) - pos).cast("double")).cast("bigint")
-            )
-        ),
-    )
-    return F.aggregate(weighted, F.lit(0).cast("bigint"), lambda a, b: a + b)
-
 
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two bigint hash values."""

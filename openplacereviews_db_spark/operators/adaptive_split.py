@@ -80,7 +80,8 @@ def adaptive_split_cells(pts: DataFrame, lat_col: str = "lat",
     # (<= occupied finest cells), so materialize the one heavy pass
     # once and let every duplicate subtree scan the checkpoint
     # (r14 interleaved A/B at sf0.1: 2.8-5.4 -> 2.3-2.9 s e2e,
-    # values identical; scripts/r14_ab_s4.py).
+    # values identical; OPTIMIZATION_r14.md "Optimizations landed",
+    # item 10).
     finest = finest.localCheckpoint(eager=True)
 
     # per-level counts roll up from the single finest aggregation:

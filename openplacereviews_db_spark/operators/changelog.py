@@ -233,25 +233,6 @@ def apply_change_map(doc: dict, change: dict[str, Any]) -> dict:
     return doc
 
 
-def current_values(doc: dict, change: dict[str, Any]) -> dict[str, Any]:
-    """The ``current`` section for a change map: old value per touched
-    path that exists (reference stores previous values for optimistic
-    concurrency, ``PlaceOpObjectHelper.java:150-169``)."""
-    out: dict[str, Any] = {}
-    for path in change:
-        parts = parse_path(path)
-        holder = _descend(doc, parts, create=False)
-        if holder is None:
-            continue
-        last = parts[-1]
-        if isinstance(last, int):
-            if isinstance(holder, list) and last < len(holder):
-                out[path] = holder[last]
-        elif isinstance(holder, dict) and last in holder:
-            out[path] = holder[last]
-    return out
-
-
 def generate_diff(old: Any, new: Any, prefix: list[Any] | None = None,
                   change: dict[str, Any] | None = None,
                   current: dict[str, Any] | None = None
@@ -291,10 +272,6 @@ def generate_diff(old: Any, new: Any, prefix: list[Any] | None = None,
 ACTION_CREATE = "create"
 ACTION_EDIT = "edit"
 ACTION_DELETE = "delete"
-
-#: canonical operations schema (see SURVEY.md §1.6)
-OPS_COLUMNS = ("obj_id", "block_id", "op_seq", "action", "doc", "change")
-
 
 def apply_operations(docs: DataFrame, ops: DataFrame,
                      id_col: str = "obj_id", doc_col: str = "doc") -> DataFrame:

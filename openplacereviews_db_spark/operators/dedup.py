@@ -12,7 +12,8 @@ document corpora, each one Spark-first:
 - ``simhash_pairs``      — near-dup pairs by Hamming distance (blocked on
                             the top-16-bit prefix so the self-join is not
                             quadratic at scale)
-- ``ngram_jaccard_pairs``— blocked exact n-gram Jaccard join
+- ``banded_ngram_jaccard_pairs`` — exact n-gram Jaccard within
+                            (attribute × MinHash-band) blocks
 
 Scale notes (100 TB): every pairwise operator blocks first (LSH band
 key, SimHash prefix, or a caller-supplied blocking column) so the
@@ -491,7 +492,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     (``tau_den * |∩| >= tau_num * n_a``), engine-exact.  ``ceil`` is
     integer too: ``(tau_num*n + tau_den - 1) div tau_den``.  Shingle
     sets are xxhash64 ids (8 B/shingle; counts equal string counts
-    barring a ~n²/2⁶⁵ collision, the ngram_jaccard argument).
+    barring a ~n²/2⁶⁵ collision, the minhash_lsh_pairs argument).
     """
     # SQL expression strings throughout (the r14 construction rule —
     # this builder measured ~1,700 py4j commands in Column form)
@@ -654,7 +655,7 @@ def minhash_state(df: DataFrame, text_col: str = "text",
     MinHash signature columns and (optionally) its xxhash64 shingle-id
     set.  This is THE wiring of the hash family (minhash_base →
     min(minhash_perm_i), collect_set(xxhash64)) — every consumer
-    (``minhash_band_keys``, ``dd_incremental``'s staged index,
+    (``lsh_band_rows``, ``dd_incremental``'s staged index,
     ``neardup_dedup_stream``'s per-batch state) derives from it, so
     the family can never silently fork from the shared SQL oracle
     CTEs (functions/hashing.py: minhash_base_sql/minhash_perm_sql)."""
@@ -676,23 +677,6 @@ def lsh_band_rows(state: DataFrame, num_hashes: int,
         "id", F.explode(F.expr(H.lsh_bands_sql(
             f"array({', '.join(f'h{i}' for i in range(num_hashes))})",
             bands, num_hashes // bands))).alias("band"))
-
-
-def minhash_band_keys(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", shingle_words: int = 3,
-                      num_hashes: int = 16, bands: int = 4) -> DataFrame:
-    """(id, band) — the exploded MinHash band keys of each document,
-    exactly as ``minhash_lsh_pairs`` derives them.
-
-    Join this back to the source frame to compose a banded blocking key
-    for ANY pairwise operator (e.g. ``ngram_jaccard_pairs`` with
-    ``block_col = lang × band``): block sizes then scale with the number
-    of near-duplicate clusters instead of with attribute cardinality —
-    a bare ``lang`` block is one task per language and dies on the
-    first billion-doc language."""
-    return lsh_band_rows(
-        minhash_state(df, text_col, id_col, shingle_words, num_hashes),
-        num_hashes, bands)
 
 
 def block_dedup(df: DataFrame, text_col: str = "text",
@@ -762,8 +746,8 @@ def simhash_table(df: DataFrame, text_col: str = "text",
 
     Explode-based plan: one row per distinct token, 64 codegen'd
     sum-aggregates for the per-bit votes, then one weighted combine.
-    Semantically identical to ``functions.hashing.simhash64`` (which is
-    the per-column expression form) but stays in whole-stage codegen.
+    The SimHash is the bit-majority of per-token md5 bits; the whole
+    plan stays in whole-stage codegen.
     Documents with no tokens are DROPPED (not emitted as simhash 0):
     a content hash of empty content is meaningless, two whitespace-only
     docs must not pair at Hamming 0, and the DuckDB oracle's ``w`` CTE
@@ -786,8 +770,9 @@ def simhash_table(df: DataFrame, text_col: str = "text",
     # form paid ~2 s of py4j round-trips + eager re-analysis per
     # construction — the dominant cost of the whole query at bench
     # scale (r14 phase probe: build 5.1 s vs 1.2 s execution;
-    # scripts/r14_ab_simhash_build.py pins the expression-string form
-    # at 0.35-0.38 s build with row-identical output).
+    # the expression-string form measured 0.35-0.38 s build with
+    # row-identical output — OPTIMIZATION_r14.md "Optimizations
+    # landed", item 1).
     words = words.selectExpr(
         "id", *[f"(instr('0123456789abcdef', substring(h, {n + 1}, 1)) - 1)"
                 f" AS nib{n}" for n in range(bits // 4)])
@@ -848,155 +833,6 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     t = simhash_table(df, text_col, id_col)
     return blocked_hamming_pairs(t, "id", "simhash",
                                  max_hamming, block_bits)
-
-
-def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", block_col: str | None = None,
-                        shingle_words: int = 3,
-                        min_jaccard: float = 0.2,
-                        overlapping_blocks: bool = False,
-                        slice_elems: int = 4_000_000) -> DataFrame:
-    """Exact n-gram Jaccard pairs within blocks.
-
-    ``overlapping_blocks=True`` declares that one document may appear in
-    several blocks (e.g. ``block_col`` composed with MinHash band keys
-    from :func:`minhash_band_keys`) — pairs are then deduplicated across
-    blocks.  The per-pair Jaccard is computed from the full shingle sets
-    either way, so overlap changes recall, never values.
-
-    Plan: dictionary-encode shingles (distinct-shingle dimension table,
-    broadcast), gather each document's shingle-id set, then one
-    ``applyInPandas`` per block computing all pairwise intersection counts
-    as a single binary-matrix GEMM (``M @ M.T``) — exact counts, vectorized,
-    ~1000x the throughput of per-pair array intersection.  Blocks are the
-    unit of parallelism (the reference's tile-blocking generalized), so the
-    shuffle key is ``block_col`` and no block ever needs more than one task.
-
-    The final round + threshold happens in Spark (JVM `round`) so results
-    are bit-identical with a SQL oracle computing `round(i/u, 6)`.
-    """
-    base = df.withColumn("blk", F.col(block_col) if block_col else F.lit(0))
-    exploded = exploded_shingles(
-        base, text_col, id_col, shingle_words, extra_cols=["blk"],
-        distinct=False,  # collect_set dedups; skips a full shuffle
-    )
-    # Shingle ids are xxhash64 of the shingle text — no dictionary pass,
-    # no global-window bottleneck.  A 64-bit collision would merge two
-    # distinct shingles (probability ~n²/2⁶⁵ — negligible even at 10¹⁰
-    # shingles); the GEMM kernel only needs ids to be distinct.
-    encoded = (
-        exploded.withColumn("sid", F.xxhash64("s"))
-        .groupBy("blk", "id")
-        .agg(F.collect_set("sid").alias("sids"))
-    )
-
-    emit_floor = min_jaccard - 1e-6
-    out_schema = "id_a long, id_b long, jac_raw double"
-
-    def gemm(pdf):
-        import numpy as np
-        import pandas as pd
-
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "jac_raw": []})
-        pdf = pdf.sort_values("id").reset_index(drop=True)
-        ids = pdf["id"].to_numpy()
-        # CSR of the block's doc→shingle-id incidence (local vocab ids).
-        lens = np.fromiter((len(row) for row in pdf["sids"]), dtype=np.int64,
-                           count=n)
-        indptr = np.concatenate(([0], np.cumsum(lens)))
-        flat_sids = (np.concatenate([np.asarray(row, dtype=np.int64)
-                                     for row in pdf["sids"]])
-                     if indptr[-1] else np.empty(0, dtype=np.int64))
-        local, cols = np.unique(flat_sids, return_inverse=True)
-        vocab = len(local)
-        sizes = lens.astype(np.float64)
-        # Row-blocked either way: the whole n×n intersection matrix is
-        # O(n²) — a hot block would OOM the worker at scale (the r10
-        # sf10 lesson from similarity._GEMM_SLICE_ELEMS).  The DENSE
-        # incidence matrix is O(n·vocab), which for a hot block can
-        # dwarf the n² term (r10 ADVICE) — so the dense GEMM fast path
-        # only runs when n·vocab fits the same slice budget; otherwise a
-        # postings (CSC) sparse path computes the identical integer
-        # intersection counts with O(nnz + slice) memory.
-        dense = n * vocab <= max(slice_elems, 1)
-        if dense:
-            m = np.zeros((n, vocab), dtype=np.float32)
-            rows_of = np.repeat(np.arange(n, dtype=np.int64), lens)
-            m[rows_of, cols] = 1.0
-        else:
-            # CSC postings: for each local shingle, the doc rows holding
-            # it.  collect_set guarantees (row, shingle) uniqueness, so
-            # intersection counts are plain event counts.
-            order = np.argsort(cols, kind="stable")
-            post_rows = np.repeat(np.arange(n, dtype=np.int64), lens)[order]
-            post_indptr = np.concatenate(
-                ([0], np.cumsum(np.bincount(cols, minlength=vocab))))
-        step = max(1, slice_elems // max(n, 1))
-        out_a, out_b, out_j = [], [], []
-        for i0 in range(0, n - 1, step):
-            i1 = min(i0 + step, n)
-            if dense:
-                # float32 GEMM is exact for integer counts < 2^24.
-                inter = (m[i0:i1] @ m.T).astype(np.float64)
-            else:
-                inter = np.zeros((i1 - i0) * n, dtype=np.int64)
-                q_sids = cols[indptr[i0]:indptr[i1]]
-                q_of = np.repeat(np.arange(i1 - i0, dtype=np.int64),
-                                 lens[i0:i1])
-                post_lens = post_indptr[q_sids + 1] - post_indptr[q_sids]
-                # Chunk the (query-shingle → posting) event stream so no
-                # materialized array exceeds the slice budget.
-                cum = np.cumsum(post_lens)
-                a = 0
-                while a < len(q_sids):
-                    base_ev = cum[a - 1] if a else 0
-                    b = int(np.searchsorted(
-                        cum, base_ev + max(slice_elems, 1), side="right"))
-                    b = min(max(b, a + 1), len(q_sids))
-                    seg_lens = post_lens[a:b]
-                    tot = int(seg_lens.sum())
-                    if tot:
-                        starts = post_indptr[q_sids[a:b]]
-                        seg_ends = np.cumsum(seg_lens)
-                        # range-concatenation: event e in [0, tot) maps to
-                        # post_rows[starts[k] + (e - seg_start[k])]
-                        offs = (np.arange(tot, dtype=np.int64)
-                                - np.repeat(seg_ends - seg_lens, seg_lens))
-                        ev_rows = post_rows[np.repeat(starts, seg_lens)
-                                            + offs]
-                        ev_q = np.repeat(q_of[a:b], seg_lens)
-                        inter += np.bincount(ev_q * n + ev_rows,
-                                             minlength=(i1 - i0) * n)
-                    a = b
-                inter = inter.reshape(i1 - i0, n).astype(np.float64)
-            # divide in float64 so round(i/u, 6) is bit-identical with
-            # the SQL oracle
-            union = sizes[i0:i1, None] + sizes[None, :] - inter
-            with np.errstate(divide="ignore", invalid="ignore"):
-                jac = np.where(union > 0, inter / union, 0.0)
-            ii, jj = np.nonzero(jac >= emit_floor)
-            gi = ii + i0
-            keep = jj > gi  # strict upper triangle
-            out_a.append(ids[gi[keep]])
-            out_b.append(ids[jj[keep]])
-            out_j.append(jac[ii[keep], jj[keep]])
-        return pd.DataFrame({
-            "id_a": np.concatenate(out_a) if out_a else ids[:0],
-            "id_b": np.concatenate(out_b) if out_b else ids[:0],
-            "jac_raw": (np.concatenate(out_j) if out_j
-                        else np.array([], dtype=np.float64)),
-        })
-
-    pairs = encoded.groupBy("blk").applyInPandas(gemm, schema=out_schema)
-    if overlapping_blocks:
-        pairs = pairs.dropDuplicates(["id_a", "id_b"])
-    return (
-        pairs.withColumn("jaccard", F.round("jac_raw", 6))
-        .where(F.col("jaccard") >= min_jaccard)
-        .select("id_a", "id_b", "jaccard")
-    )
 
 
 def duplicate_spans(df: DataFrame, text_col: str = "text",

@@ -209,18 +209,6 @@ def resize_media(df: DataFrame, max_side: int = 32) -> DataFrame:
         kernel, schema=schema)
 
 
-def media_stats(df: DataFrame) -> DataFrame:
-    """Metadata-only aggregate — must not read the payload column (the
-    plan is checked for that in tests via the ReadSchema)."""
-    return (
-        df.groupBy("kind")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.avg("width").alias("avg_w"),
-             F.avg("height").alias("avg_h"),
-             F.sum("duration_s").alias("total_duration_s"))
-    )
-
-
 def synthetic_media(spark, n: int = 64) -> DataFrame:
     """Deterministic media corpus for tests: payload bytes derived from
     the id, kinds cycling image/audio/video."""
@@ -266,13 +254,13 @@ def _token_votes(w: str):
 
 
 def _phash64_py(content: str) -> int | None:
-    """Python twin of ``functions.hashing.simhash64`` / the
-    ``dedup.simhash_table`` codegen plan (same norm → distinct tokens →
-    md5 nibble votes → sign-bit weights), for fingerprints that must be
-    computed INSIDE a payload-decode kernel.  A real image pHash slots
-    in here unchanged (DCT over the decoded bitmap instead of token
-    votes); the contract — 64-bit locality-sensitive code per payload —
-    is what downstream blocking consumes."""
+    """Python twin of the ``dedup.simhash_table`` codegen plan (same
+    norm → distinct tokens → md5 nibble votes → sign-bit weights), for
+    fingerprints that must be computed INSIDE a payload-decode kernel.
+    A real image pHash slots in here unchanged (DCT over the decoded
+    bitmap instead of token votes); the contract — 64-bit
+    locality-sensitive code per payload — is what downstream blocking
+    consumes."""
     import re
 
     import numpy as np

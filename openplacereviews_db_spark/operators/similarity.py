@@ -80,7 +80,7 @@ def knn_label_predict(corpus: DataFrame, queries: DataFrame, k: int = 7,
     smaller label so the result is hash-stable.  Returns one row per
     query: (q_id, pred_label, votes, true_label, correct).  The probe
     side broadcasts; the corpus streams — at scale swap ``cosine_topk``
-    for ``cosine_topk_lsh``/IVF with the same vote tail.
+    for ``cosine_topk_ivf`` with the same vote tail.
     """
     topk = cosine_topk(corpus, queries, k, vec_col, id_col)
     nbr = corpus.select(F.col(id_col).alias("c_id"),
@@ -363,9 +363,9 @@ _SIGN_CACHE: dict = {}
 
 
 def _sign_matrix(planes: int, dim: int, offset: int = 0):
-    """±1 hyperplane components, same derivation as
-    ``hyperplane_bucket``: +1 iff the first hex nibble of md5("i:j") is
-    even.  Pure constants — computed once per worker, not per row."""
+    """±1 hyperplane components: +1 iff the first hex nibble of
+    md5("i:j") is even.  Pure constants — computed once per worker,
+    not per row."""
     import hashlib
 
     import numpy as np
@@ -386,14 +386,13 @@ def banded_hyperplane_buckets(embs: DataFrame, planes: int, bands: int,
                               id_col: str = "vec_id") -> DataFrame:
     """(id, v, band_bucket) with one row per band — the OR-banding keys
     of every vector, all ``bands × planes`` signature bits computed in a
-    single ``M @ S.T`` GEMM per Arrow batch (the column-expression form
-    interprets dim × planes md5 calls PER ROW; this is the vectorized
-    equivalent).  Bit semantics match ``hyperplane_bucket``: plane i's
-    sign comes from md5("i:j"), MSB = lowest plane index; float
-    summation order differs from the sequential fold, so a dot product
-    within ~1e-12 of zero can land in a different bucket — candidate
-    recall moves (gated by the recall-floor tests), verified pair values
-    never do.
+    single ``M @ S.T`` GEMM per Arrow batch (a column-expression form
+    would interpret dim × planes md5 calls PER ROW).  Plane i's sign
+    comes from md5("i:j") (see ``_sign_matrix``), MSB = lowest plane
+    index; float summation order differs from a sequential fold, so a
+    dot product within ~1e-12 of zero can land in a different bucket —
+    candidate recall moves (gated by the recall-floor tests), verified
+    pair values never do.
     """
     import numpy as np
     import pandas as pd
@@ -427,62 +426,6 @@ def banded_hyperplane_buckets(embs: DataFrame, planes: int, bands: int,
                       as_double(F.col(vec_col)).alias("v"))
     return src.mapInPandas(
         kernel, schema="id long, v array<double>, band_bucket string")
-
-
-def hyperplane_bucket(vec: Column, planes: int = 8,
-                      plane_offset: int = 0) -> Column:
-    """Deterministic random-hyperplane LSH bucket id (0..2^planes-1).
-
-    Hyperplane h_i's j-th component is ±1 chosen by a bit of
-    md5('i:j') — reproducible everywhere, no RNG state.  sign(dot) per
-    plane forms the bucket bits.  ``plane_offset`` selects an
-    independent plane family (for banding).
-    """
-    def plane_sign(i: int) -> Column:
-        prod = F.zip_with(
-            vec,
-            F.sequence(F.lit(0), F.size(vec) - 1),
-            lambda x, j: x * F.when(
-                # first hex nibble of md5("i:j") even → +1 else −1
-                F.instr(F.lit("0123456789abcdef"),
-                        F.substring(F.md5(F.concat_ws(":", F.lit(i), j)), 1, 1)) % 2 == 1,
-                F.lit(1.0),
-            ).otherwise(F.lit(-1.0)),
-        )
-        s = F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v)
-        return F.when(s >= 0, F.lit(1)).otherwise(F.lit(0))
-
-    bucket = F.lit(0)
-    for i in range(plane_offset, plane_offset + planes):
-        bucket = bucket * 2 + plane_sign(i)
-    return bucket
-
-
-def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                    vec_col: str = "embedding", id_col: str = "vec_id",
-                    planes: int = 6, round_digits: int = 4) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's hyperplane
-    bucket.  Same output schema as ``cosine_topk``; recall < 1 by design
-    (scale path: bucket equi-join instead of all-pairs)."""
-    # both sides MUST derive buckets through the same kernel — mixing the
-    # column-expression fold with the GEMM kernel could disagree on a
-    # dot product within float noise of zero and miss the shared bucket
-    q = banded_hyperplane_buckets(queries, planes, 1, vec_col, id_col).select(
-        F.col("id").alias("q_id"), F.col("v").alias("q_vec"),
-        F.col("band_bucket").alias("bucket"))
-    c = banded_hyperplane_buckets(corpus, planes, 1, vec_col, id_col).select(
-        F.col("id").alias("c_id"), F.col("v").alias("c_vec"),
-        F.col("band_bucket").alias("bucket"))
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .where(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id", "c_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), round_digits).alias("sim"),
-        )
-    )
-    w = F.row_number().over(Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("c_id")))
-    return scored.withColumn("rank", w).where(F.col("rank") <= k)
 
 
 #: bucket-size target for auto-sized hyperplane signatures: per-bucket

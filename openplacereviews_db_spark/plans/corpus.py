@@ -2156,7 +2156,7 @@ ORACLES["dd_incremental"] = f"""
 def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X91: multimodal near-dup — the image-dedup pipeline shape:
     payloads cross the Arrow boundary once into a perceptual-hash
-    kernel (stub pHash = the simhash64 semantics over the decoded
+    kernel (stub pHash = the simhash_table semantics over the decoded
     content; a real DCT pHash slots into ``_phash64_py`` unchanged),
     then the 64-bit codes dedup JVM-side via the top-16-bit-prefix
     blocked Hamming equi-join — never a quadratic payload comparison.

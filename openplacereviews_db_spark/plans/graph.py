@@ -25,11 +25,10 @@ from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
 
-_DAMP = 0.85
 _ITERS = 3
 #: fixed-point scale for integer-carried ranks (pico-ranks)
 _SCALE = 10 ** 12
-#: (1 - _DAMP) * _SCALE, exact in integers
+#: (1 - 0.85) * _SCALE (damping 0.85), exact in integers
 _BASE_NUM = 150_000_000_000
 
 

@@ -61,25 +61,17 @@ def get_spark(app_name: str = "openplacereviews-db-spark",
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Shuffle/spill codec is a measured DEPLOY knob, not a free win:
-        # r12 A/B'd zstd as the default and reverted — on this engine's
-        # dominant traffic (xxhash64 ids, near-incompressible) zstd
-        # bought only 12% bytes while costing shuffle-heavy queries
+        # Shuffle/spill codec stays at Spark's default (lz4): on this
+        # engine's dominant traffic (xxhash64 ids, near-incompressible)
+        # zstd saved only 12% bytes while costing shuffle-heavy queries
         # 20-40% wall (g11_triangle_count 5.8-6.3 s lz4 vs 7.2-9.2 s
-        # zstd, interleaved JVMs).  SPARK_GRAFT_IO_CODEC=zstd remains
-        # the right setting for DISK-BOUND at-scale runs (the sf100
-        # one-box sessions) and for network-constrained clusters.
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
+        # zstd, interleaved JVMs).
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", driver_mem_for(sf_dir))
-        # default off (a 200-query bench session pays UI bookkeeping for
-        # nothing); SPARK_GRAFT_UI=1 turns it on for the measurement
-        # probes that read per-stage shuffle metrics over the REST API
-        # (scripts/shuffle_probe.py)
-        .config("spark.ui.enabled",
-                "true" if os.environ.get("SPARK_GRAFT_UI", "0").lower()
-                not in ("", "0", "false") else "false")
+        # off: a 200-query bench session pays UI bookkeeping for
+        # nothing, and per-stage metrics are read from the status store,
+        # which the UI does not need
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # Generated plans here can be enormous (closed-form OLC / name
         # cascade expression trees); retained-execution metadata and
@@ -108,6 +100,18 @@ def blockmgr_bytes(spark: SparkSession) -> int:
     return sum(path_bytes(d.getAbsolutePath()) or 0 for d in dirs)
 
 
+def drop_cached_blocks(spark: SparkSession) -> None:
+    """Drop every cached block: the catalog cache AND the JVM's
+    persistent RDDs.  ``clearCache`` alone leaves localCheckpoint /
+    persist blocks of finished queries in the block manager, and 90+
+    queries in one JVM accumulate heap and GC pressure."""
+    spark.catalog.clearCache()
+    it = (spark.sparkContext._jsc.sc()
+          .getPersistentRDDs().values().iterator())
+    while it.hasNext():
+        it.next().unpersist(False)
+
+
 def release_shuffles(spark: SparkSession, settle_s: float = 20.0,
                      poll_s: float = 0.5) -> int:
     """Free the shuffle files of FINISHED queries inside a live JVM.
@@ -132,11 +136,7 @@ def release_shuffles(spark: SparkSession, settle_s: float = 20.0,
     import math
     import time
 
-    spark.catalog.clearCache()
-    it = (spark.sparkContext._jsc.sc()
-          .getPersistentRDDs().values().iterator())
-    while it.hasNext():
-        it.next().unpersist(False)
+    drop_cached_blocks(spark)
     before = blockmgr_bytes(spark)
     # two GC rounds minimum: the first collects the Py4J proxies and
     # enqueues the JVM weak refs, the second lets the cleaner thread's

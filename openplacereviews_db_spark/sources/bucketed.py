@@ -72,13 +72,3 @@ def write_bucketed(df: DataFrame, table: str, key: str,
     shuffle."""
     (df.write.mode("overwrite").format("parquet")
      .bucketBy(buckets, key).sortBy(key).saveAsTable(table))
-
-
-def cobucketed_join(spark: SparkSession, left_table: str,
-                    right_table: str, key: str,
-                    how: str = "inner") -> DataFrame:
-    """Join two tables previously written with :func:`write_bucketed`
-    on the same key and bucket count; the plan contains no Exchange —
-    each task reads bucket i of both sides."""
-    return spark.table(left_table).join(spark.table(right_table),
-                                        on=key, how=how)

@@ -160,74 +160,3 @@ def filter_entities(df: DataFrame, tag: str | None = None,
     if changed_until is not None:
         out = out.where(F.col("timestamp") <= changed_until)
     return out
-
-
-def entity_centers(entities: DataFrame, max_relation_depth: int = 3) -> DataFrame:
-    """Centers for every entity (OsmMapUtils.getCenter analog) —
-    with two INTENTIONAL divergences from the reference:
-
-    - ways use the plain vertex mean, not getWeightCenterForWay's
-      snapped weighted center (the exact kernel lives in
-      ``functions.geometry.way_centroid``; this bulk path keeps the
-      whole computation in codegen'd aggregates);
-    - relations referencing relations are resolved by a bounded
-      iterative join (``max_relation_depth`` rounds), where the
-      reference SKIPS relation members outright ("skip relations to
-      avoid circular dependencies", OsmMapUtils.java:177-196) — pass
-      ``max_relation_depth=1``-style usage with relation members absent
-      for strict parity; our extension only ADDS centers the reference
-      leaves null.
-
-    Returns (entity_type, id, center_lat, center_lon); relations whose
-    members never resolve (dangling refs) keep null centers.
-    """
-    nodes = (entities.where(F.col("entity_type") == "node")
-             .select("entity_type", "id",
-                     F.col("lat").alias("center_lat"),
-                     F.col("lon").alias("center_lon")))
-    node_pts = nodes.select(F.col("id").alias("ref"),
-                            F.col("center_lat").alias("nlat"),
-                            F.col("center_lon").alias("nlon"))
-    ways = (
-        entities.where(F.col("entity_type") == "way")
-        .select("id", F.explode("nd_refs").alias("ref"))
-        .join(node_pts, on="ref")
-        .groupBy("id")
-        .agg(F.avg("nlat").alias("center_lat"),
-             F.avg("nlon").alias("center_lon"))
-        .select(F.lit("way").alias("entity_type"), "id",
-                "center_lat", "center_lon")
-    )
-    resolved = nodes.unionByName(ways).localCheckpoint()
-    rel_members = (
-        entities.where(F.col("entity_type") == "relation")
-        .select("id", F.explode("members").alias("m"))
-        .select("id", F.col("m.type").alias("m_type"),
-                F.col("m.ref").alias("m_ref"))
-        .localCheckpoint()
-    )
-    for _ in range(max_relation_depth):
-        lookup = resolved.select(
-            F.col("entity_type").alias("m_type"),
-            F.col("id").alias("m_ref"),
-            F.col("center_lat").alias("mlat"),
-            F.col("center_lon").alias("mlon"))
-        rel_centers = (
-            rel_members.join(lookup, on=["m_type", "m_ref"])
-            .groupBy("id")
-            .agg(F.avg("mlat").alias("center_lat"),
-                 F.avg("mlon").alias("center_lon"))
-            .select(F.lit("relation").alias("entity_type"), "id",
-                    "center_lat", "center_lon")
-        )
-        resolved = (nodes.unionByName(ways).unionByName(rel_centers)
-                    .localCheckpoint())
-    unresolved = (
-        entities.select("entity_type", "id")
-        .join(resolved.select("entity_type", "id"),
-              on=["entity_type", "id"], how="left_anti")
-        .select("entity_type", "id",
-                F.lit(None).cast("double").alias("center_lat"),
-                F.lit(None).cast("double").alias("center_lon"))
-    )
-    return resolved.unionByName(unresolved)

@@ -48,10 +48,6 @@ def load_table(spark: SparkSession, name: str,
     return spark.read.parquet(path)
 
 
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register each table as a temp view so plans can use spark.sql()."""
     for t in TABLES:

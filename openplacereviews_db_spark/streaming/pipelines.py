@@ -28,49 +28,6 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: schema of the driver's events table, as a streaming source
-EVENTS_DDL = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-
-
-def stream_events(spark: SparkSession, src_dir: str,
-                  fmt: str = "json") -> DataFrame:
-    """File-source stream of events rows (new files = new data, the
-    batch-incremental ingest pattern; offsets live in the checkpoint)."""
-    return (spark.readStream.format(fmt).schema(EVENTS_DDL)
-            .option("maxFilesPerTrigger", 8).load(src_dir))
-
-
-def windowed_event_counts(events: DataFrame, window: str = "10 minutes",
-                          watermark: str = "3 minutes") -> DataFrame:
-    """Per-type tumbling-window counts with a late-data watermark (the
-    reference's 3-minute source-lag margin)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"),
-             F.round(F.sum("value"), 3).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-                "event_type", "cnt", "sum_value")
-    )
-
-
-def sessionize_stream(events: DataFrame, gap: str = "30 minutes",
-                      watermark: str = "10 minutes") -> DataFrame:
-    """Per-user session windows (gap-based), the stateful-grouping
-    analog of the reference's G2 clustering for activity streams."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("s"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 3).alias("session_value"))
-        .select("user_id", F.col("s.start").alias("session_start"),
-                F.col("s.end").alias("session_end"),
-                "n_events", "session_value")
-    )
-
-
 def _read_epoch_marker(dirpath: str) -> int | None:
     """Parse the ``_epoch`` watermark inside a snapshot dir; an absent,
     empty, or torn (unparseable) marker means NOT committed — the file
@@ -184,36 +141,6 @@ def apply_changelog_stream(ops_stream: DataFrame, snapshot_dir: str,
     return (ops_stream.writeStream.foreachBatch(fold_batch)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True))
-
-
-def stateful_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-user
-    running (count, sum) maintained in the state store across
-    micro-batches AND across restarts (state lives in the checkpoint).
-
-    This is the extension point the reference lacks entirely — arbitrary
-    per-key state machines over an unbounded stream (the brief's
-    "custom stateful operators" bullet).  One row is emitted per key per
-    micro-batch with the updated totals.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "user_id long, n_events long, total double"
-    state_schema = "n long, total double"
-
-    def fn(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                            "total": [round(total, 3)]})
-
-    return (events.groupBy("user_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout))
 
 
 # ---------------------------------------------------------------------------
@@ -549,7 +476,7 @@ def neardup_dedup_stream(docs_stream: DataFrame, index_dir: str,
     length, and the verify intersects bigint arrays; Jaccard over the
     ids equals Jaccard over the strings barring a 64-bit collision
     (probability ~n²/2⁶⁵ — the same argument as
-    ``dedup.ngram_jaccard_pairs``), so the batch oracle still applies
+    ``dedup.minhash_lsh_pairs``), so the batch oracle still applies
     value-for-value.  One table instead of the pre-r14 bands/sets PAIR
     halves the per-batch index write+read jobs AND removes the
     torn-between-two-appends failure mode outright (r13 ADVICE);

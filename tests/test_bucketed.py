@@ -1,9 +1,9 @@
-"""Bucketed co-located join: the osmid side-table story at 100 TB.
+"""Bucketed and partitioned layouts: the osmid side-table story at 100 TB.
 
-Writes the exploded (osm_id, tile_id, suffix) index AND a lookup batch
-bucketed on osm_id, joins them, and asserts the physical plan contains
-ZERO Exchange nodes — the join is bucket-to-bucket.  Values are checked
-against the plain (shuffling) join.
+The x75 bucketed fact-fact join must not shuffle below the join, the
+x74/x76 scans must prune partitions at the scan node, and
+``ensure_fresh_bucketed`` must guard staged tables against a stale
+cached file listing.
 """
 
 from __future__ import annotations
@@ -17,42 +17,6 @@ def bucket_db(spark):
               "LOCATION '/tmp/opr_spark_bucketdemo'")
     yield "bucketdemo"
     spark.sql("DROP DATABASE IF EXISTS bucketdemo CASCADE")
-
-
-def test_cobucketed_join_has_no_exchange(spark, sf_dir, bucket_db):
-    from pyspark.sql import functions as F
-
-    from openplacereviews_db_spark.sources.bucketed import (
-        cobucketed_join, write_bucketed)
-    from openplacereviews_db_spark.sources.places import synthetic_places
-
-    places = synthetic_places(spark, sf_dir)
-    index = places.select(
-        F.explode(F.col("source.osm")).alias("o"),
-        "tile_id", "suffix",
-    ).select(F.col("o.id").alias("osm_id"), "tile_id", "suffix")
-    lookup = index.select("osm_id").distinct().limit(500) \
-        .withColumn("batch_no", F.lit(1))
-
-    write_bucketed(index, f"{bucket_db}.osmid_index", "osm_id", buckets=8)
-    write_bucketed(lookup, f"{bucket_db}.lookup_batch", "osm_id", buckets=8)
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = cobucketed_join(spark, f"{bucket_db}.osmid_index",
-                                 f"{bucket_db}.lookup_batch", "osm_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, (
-            "co-bucketed join still shuffles:\n" + plan[:2000])
-
-        got = {(r["osm_id"], r["tile_id"], r["suffix"])
-               for r in joined.collect()}
-        want = {(r["osm_id"], r["tile_id"], r["suffix"])
-                for r in index.join(lookup, "osm_id").collect()}
-        assert got == want and len(got) > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_x75_fact_fact_join_has_no_exchange_below_agg(spark, sf_dir):

@@ -70,14 +70,6 @@ def test_quoted_key_edit():
     assert doc["tags"]["addr.city"] == "Paris"
 
 
-def test_current_values():
-    doc = {"tags": {"name": "X", "web": "y"}}
-    cur = C.current_values(doc, {"tags.name": {"set": "Z"},
-                                 "tags.missing": {"set": 1},
-                                 "tags.web": "delete"})
-    assert cur == {"tags.name": "X", "tags.web": "y"}
-
-
 # ---------------------------------------------------------------------------
 # diff golden cases (modeled on the reference's generateDiff behavior)
 # ---------------------------------------------------------------------------

@@ -36,19 +36,6 @@ def test_frame_sampling(spark):
         assert sorted(idxs) == list(range(0, max(idxs) + 1, 5))
 
 
-def test_media_stats_prunes_payload(spark, tmp_path):
-    path = str(tmp_path / "media.parquet")
-    MM.synthetic_media(spark, 9).write.parquet(path)
-    df = spark.read.parquet(path)
-    stats = MM.media_stats(df)
-    got = {r["kind"]: r["n"] for r in stats.collect()}
-    assert got == {"image": 3, "audio": 3, "video": 3}
-    # the parquet scan's ReadSchema must not include the payload bytes
-    physical = stats._jdf.queryExecution().executedPlan().toString()
-    scan_lines = [ln for ln in physical.splitlines() if "ReadSchema" in ln]
-    assert scan_lines and all("payload" not in ln for ln in scan_lines)
-
-
 def test_pil_backend_decodes_real_image_when_available(spark):
     """When a real codec is importable the backend must decode actual
     image bytes (real width/height), and still fall back per-row to the

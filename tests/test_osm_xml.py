@@ -86,38 +86,6 @@ def test_filter_entities(spark, tmp_path):
     assert [r["id"] for r in boxed.collect()] == [102]
 
 
-REL_XML = """<?xml version="1.0" encoding="UTF-8"?>
-<osm version="0.6">
-  <node id="1" lat="0.0" lon="0.0"/>
-  <node id="2" lat="0.0" lon="2.0"/>
-  <node id="3" lat="2.0" lon="2.0"/>
-  <way id="10"><nd ref="1"/><nd ref="2"/></way>
-  <relation id="20">
-    <member type="way" ref="10" role="outer"/>
-    <member type="node" ref="3" role=""/>
-  </relation>
-  <relation id="21">
-    <member type="relation" ref="20" role=""/>
-  </relation>
-  <relation id="22">
-    <member type="node" ref="999" role=""/>
-  </relation>
-</osm>
-"""
-
-
-def test_entity_centers(spark, tmp_path):
-    p = tmp_path / "rel.osm"
-    p.write_text(REL_XML)
-    ents = osm_xml.read_osm_xml(spark, str(p))
-    got = {(r["entity_type"], r["id"]): (r["center_lat"], r["center_lon"])
-           for r in osm_xml.entity_centers(ents).collect()}
-    assert got[("way", 10)] == (0.0, 1.0)          # mean of nodes 1,2
-    assert got[("relation", 20)] == (1.0, 1.5)     # mean(way center, node 3)
-    assert got[("relation", 21)] == (1.0, 1.5)     # second-level recursion
-    assert got[("relation", 22)] == (None, None)   # dangling member
-
-
 def test_osmxml_datasource_reads_gzip_and_plain_identically(spark, tmp_path):
     """The connector must parse .osm and .osm.gz to identical rows, and
     carry diff-mode action/section context like the mapInPandas path."""

@@ -256,7 +256,7 @@ EAGER_BUILD_OK = {"dd_dup_groups",  # live CC loop (the contraction demo)
                   # ^ checkpoints the finest cell-count aggregation
                   # once: the frontier walk nests it up to 2^6 times
                   # (r14: 2.8-5.4 -> 2.3-2.9 s e2e at sf0.1,
-                  # scripts/r14_ab_s4.py)
+                  # OPTIMIZATION_r14.md "Optimizations landed" 10)
 
 
 def test_plan_build_runs_no_computation_jobs(spark, sf_dir):
@@ -402,6 +402,71 @@ def test_driver_priority_names_resolve():
     # and every oracle key refers to a registered query
     stale = [n for n in entrymod.oracle_sql() if n not in q]
     assert not stale, stale
+
+
+def test_every_package_def_is_reachable():
+    """Every top-level def, class and ``NAME = ...`` of the package must
+    be reachable from a root, or it is dead code that still has to be
+    read and kept in step.  Roots: the package's other module-level
+    statements (``QUERIES[...]``/``ORACLES[...]`` registrations), and
+    every name used in ``__spark_entry__.py``, ``bench.py``,
+    ``perfbench/``, ``tests/`` and ``scripts/``.  Reachability is by
+    name (a def's body reaches every name and attribute it uses, an
+    ``import x as y`` makes ``y`` reach ``x``) and runs to a fixpoint.
+    Dunder names are exempt."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(entrymod.__file__).resolve().parent
+
+    def names(node):
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out.add(n.name.rsplit(".", 1)[-1])
+        return out
+
+    defs: dict[str, list] = {}   # name -> [(where, names its body uses)]
+    reached: set[str] = set()
+    for path in sorted((repo / "openplacereviews_db_spark").rglob("*.py")):
+        rel = path.relative_to(repo)
+        for st in ast.parse(path.read_text()).body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef,
+                               ast.ClassDef)):
+                defs.setdefault(st.name, []).append(
+                    (f"{rel}:{st.lineno}", names(st)))
+            elif (isinstance(st, ast.Assign) and len(st.targets) == 1
+                  and isinstance(st.targets[0], ast.Name)):
+                defs.setdefault(st.targets[0].id, []).append(
+                    (f"{rel}:{st.lineno}", names(st.value)))
+            elif isinstance(st, (ast.Import, ast.ImportFrom)):
+                for a in st.names:
+                    if a.asname:
+                        defs.setdefault(a.asname, []).append(
+                            (f"{rel}:{st.lineno}",
+                             {a.name.rsplit(".", 1)[-1]}))
+            else:
+                reached |= names(st)
+    roots = [repo / "__spark_entry__.py", repo / "bench.py"]
+    for d in ("perfbench", "tests", "scripts"):
+        roots += sorted((repo / d).rglob("*.py"))
+    for path in roots:
+        reached |= names(ast.parse(path.read_text()))
+
+    todo = list(reached)
+    while todo:
+        for _, used in defs.get(todo.pop(), ()):
+            todo += used - reached
+            reached |= used
+    dead = sorted(f"{where} {name}" for name, sites in defs.items()
+                  if name not in reached
+                  and not (name.startswith("__") and name.endswith("__"))
+                  for where, _ in sites)
+    assert not dead, "unreachable package defs:\n" + "\n".join(dead)
 
 
 #: documented plan-shape claims for the scoring operators: the physical

@@ -15,52 +15,6 @@ def _write_events(path, rows):
             f.write(json.dumps(r) + "\n")
 
 
-EVENTS = [
-    {"event_id": 1, "ts": "2024-01-01T00:01:00Z", "user_id": 1,
-     "event_type": "view", "value": 1.0, "props": "{}"},
-    {"event_id": 2, "ts": "2024-01-01T00:05:00Z", "user_id": 1,
-     "event_type": "view", "value": 2.0, "props": "{}"},
-    {"event_id": 3, "ts": "2024-01-01T00:14:00Z", "user_id": 2,
-     "event_type": "buy", "value": 5.0, "props": "{}"},
-    {"event_id": 4, "ts": "2024-01-01T01:00:00Z", "user_id": 1,
-     "event_type": "view", "value": 3.0, "props": "{}"},
-]
-
-
-def test_windowed_counts(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    _write_events(src / "a.json", EVENTS)
-    stream = SP.stream_events(spark, str(src))
-    agg = SP.windowed_event_counts(stream)
-    q = (agg.writeStream.format("memory").queryName("wincounts")
-         .outputMode("complete")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = {(str(r["window_start"]), r["event_type"]): r["cnt"]
-            for r in spark.sql("SELECT * FROM wincounts").collect()}
-    assert rows[("2024-01-01 00:00:00", "view")] == 2
-    assert rows[("2024-01-01 00:10:00", "buy")] == 1
-    assert rows[("2024-01-01 01:00:00", "view")] == 1
-
-
-def test_sessionize(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    _write_events(src / "a.json", EVENTS)
-    stream = SP.stream_events(spark, str(src))
-    q = (SP.sessionize_stream(stream).writeStream.format("memory")
-         .queryName("sessions").outputMode("complete")
-         .option("checkpointLocation", str(tmp_path / "ck2"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = sorted([(r["user_id"], r["n_events"])
-                   for r in spark.sql("SELECT * FROM sessions").collect()])
-    # user 1: events at 00:01/00:05 in one session, 01:00 a new one
-    assert rows == [(1, 1), (1, 2), (2, 1)]
-
-
 def test_apply_changelog_stream(spark, tmp_path):
     ops_dir = tmp_path / "ops"
     ops_dir.mkdir()
@@ -106,34 +60,6 @@ def test_apply_changelog_stream(spark, tmp_path):
     got = {r["obj_id"]: json.loads(r["doc"])
            for r in spark.read.parquet(snap).collect()}
     assert got == {"p1": {"v": 2}}
-
-
-def test_stateful_user_totals(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    ck = str(tmp_path / "ck4")
-    _write_events(src / "a.json", EVENTS[:3])
-
-    def run():
-        stream = SP.stream_events(spark, str(src))
-        rows = []
-        q = (SP.stateful_user_totals(stream).writeStream
-             .foreachBatch(lambda df, _e: rows.extend(df.collect()))
-             .outputMode("update")
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        latest = {}
-        for r in rows:  # update mode; last row per user wins
-            latest[r["user_id"]] = (r["n_events"], r["total"])
-        return latest
-
-    first = run()
-    assert first[1] == (2, 3.0) and first[2] == (1, 5.0)
-    # state survives into the next incremental run via the checkpoint
-    _write_events(src / "b.json", EVENTS[3:])
-    second = run()
-    assert second[1] == (3, 6.0)
 
 
 def test_neardup_stream_four_batches(spark, sf_dir, tmp_path):
