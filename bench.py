@@ -113,12 +113,11 @@ def main() -> None:
     staged_builds: dict[str, float] = {}
     from openplacereviews_db_spark.streaming import pipelines as _SP
     for label, builder in (
-        ("split_neardup", lambda: _SP._stage_parity_split(sf_dir, "neardup")),
-        ("split_exactdd", lambda: _SP._stage_parity_split(sf_dir, "exactdd")),
-        ("split_strjoin", lambda: _SP._stage_events_split(sf_dir, "strjoin")),
-        ("split_hllstream",
-         lambda: _SP._stage_events_split(sf_dir, "hllstream")),
-        ("split_scd2", lambda: _SP._stage_time_split(sf_dir, "scd2")),
+        ("split_neardup", lambda: _SP.stage_feed(sf_dir, "neardup")),
+        ("split_exactdd", lambda: _SP.stage_feed(sf_dir, "exactdd")),
+        ("split_strjoin", lambda: _SP.stage_feed(sf_dir, "strjoin")),
+        ("split_hllstream", lambda: _SP.stage_feed(sf_dir, "hllstream")),
+        ("split_scd2", lambda: _SP.stage_feed(sf_dir, "scd2")),
     ):
         t0 = time.time()
         try:

@@ -513,7 +513,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     # NO pin on the freq join or the rank window: freq is broadcast
     # (bounded distinct-shingle counts) and the window rides the
     # shingle window's hash(id) partitioning — both exchange-free in
-    # the before-plan (plans/r15/dd_containment_before.txt)
+    # the before-plan (evidence/plans/r15/dd_containment_before.txt)
     ranked_n = (sh.join(freq, "sid").selectExpr(
         "id", "sid",
         "row_number() OVER (PARTITION BY id ORDER BY df, sid) AS rk",

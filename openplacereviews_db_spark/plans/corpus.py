@@ -877,40 +877,22 @@ def _staged_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative contraction.  Keyed on the documents parquet's mtime+size
     (the stale-cache rule); ``dd_dup_groups`` itself stays a live CC
     run, so the contraction loop remains driver-checked every round."""
-    import os
-    import tempfile
-
     from ..operators.components import dedup_groups
     from ..sources import staging
 
-    # the cache id embeds every knob that shapes the mapping, so a
-    # future parameter change can never serve the stale stage (the
-    # split-stager v2_ lesson applied preemptively).  The SAME dict
-    # (_DUP_GROUP_KNOBS) feeds the key and the computation — they
-    # cannot drift.
-    # sf dir FIRST, knobs second: the prune prefix then covers BOTH
-    # drift axes — a knob change orphans the old-knob mapping exactly
-    # like a testdata refresh orphans the old fingerprint (r13 review;
-    # a knob-embedded prefix left old-knob copies on /tmp forever)
-    prefix = (f"dupgroups_{os.path.basename(os.path.normpath(sf_dir))}_")
-    cid = (prefix + f"{_knobs_cid(_DUP_GROUP_KNOBS)}_"
-           + staging.source_fingerprint(sf_dir, "documents"))
-
-    # (the one-time pre-r13-layout migration that used to run here was
-    # removed after one round per the r14 ADVICE: it re-ran on every
-    # access and its keep="" prune could delete a still-current stage;
-    # old-layout names can no longer be created, and every r13 access
-    # already pruned the stale ones.)
-
-    def build() -> DataFrame:
+    def build(dest: str) -> None:
         pairs = dedup.minhash_lsh_pairs(_docs(spark, sf_dir),
                                         **_DUP_GROUP_KNOBS)
-        return dedup_groups(pairs)
+        dedup_groups(pairs).write.mode("overwrite").parquet(dest)
 
-    return staging.stage_raw(
-        spark, build,
-        os.path.join(tempfile.gettempdir(), "opr_spark_stage"), cid,
-        prune_prefix=prefix)
+    # the stage key embeds every knob that shapes the mapping, derived
+    # from the SAME dict that feeds the computation, so the two cannot
+    # drift and a knob change can never serve the stale stage; a new
+    # key supersedes (and prunes) the old-knob mapping exactly like a
+    # testdata refresh does
+    return spark.read.parquet(staging.stage(
+        sf_dir, "dupgroups", ["documents"], build,
+        key=_knobs_cid(_DUP_GROUP_KNOBS)))
 
 
 def dd_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2053,15 +2035,12 @@ def dd_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     lets ingest cost track batch size instead of corpus size.
     """
     import os
-    import tempfile
 
     from ..operators import dedup as dd
     from ..sources import staging
 
     d = _docs(spark, sf_dir)
     is_new = F.col("doc_id") % 10 == 0
-    fp = staging.source_fingerprint(sf_dir, "documents")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
     num_hashes, bands_n = 16, 8
 
     def per_doc(docs: DataFrame) -> DataFrame:
@@ -2075,23 +2054,15 @@ def dd_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     def bands_of(pd: DataFrame) -> DataFrame:
         return dd.lsh_band_rows(pd, num_hashes, bands_n)
 
-    stage_root = os.path.join(tempfile.gettempdir(), "opr_spark_stage")
-    idx_name = f"ndindex2_{tag}"
-    idx_root = os.path.join(stage_root, idx_name)
+    def build(dest: str) -> None:
+        per_old = per_doc(d.where(~is_new)).localCheckpoint()
+        bands_of(per_old).write.parquet(os.path.join(dest, "bands"))
+        per_old.select("id", "sids").write \
+            .parquet(os.path.join(dest, "sets"))
+
+    idx_root = staging.stage(sf_dir, "ndindex", ["documents"], build)
     bands_dir = os.path.join(idx_root, "bands")
     sets_dir = os.path.join(idx_root, "sets")
-    if not (os.path.isfile(os.path.join(bands_dir, "_SUCCESS"))
-            and os.path.isfile(os.path.join(sets_dir, "_SUCCESS"))):
-        per_old = per_doc(d.where(~is_new)).localCheckpoint()
-        bands_of(per_old).write.mode("overwrite").parquet(bands_dir)
-        per_old.select("id", "sids").write.mode("overwrite") \
-            .parquet(sets_dir)
-    # prune on every access (r13 review: a build-branch-only prune
-    # misses siblings that were under the age guard at build time)
-    staging.prune_stale_siblings(
-        stage_root,
-        f"ndindex2_{os.path.basename(os.path.normpath(sf_dir))}_",
-        idx_name)
     # the ingest batch is banded + shingle-id'd in ONE pass, reused by
     # blocking and verify (eager once; dd_incremental is EAGER_BUILD_OK)
     per_new = per_doc(d.where(is_new)).localCheckpoint()

@@ -16,7 +16,6 @@ tables:
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,22 +93,13 @@ def _oplog_stage(spark: SparkSession, sf_dir: str) -> str:
     mtime+size (stale-cache rule: driver testdata drifts between
     rounds).  Returns the layout directory; readers scan parquet and
     as-of readers get metadata-time partition pruning for free."""
-    fp = (f"{staging.source_fingerprint(sf_dir, 'orders')}_"
-          f"{staging.source_fingerprint(sf_dir, 'lineitem')}")
-    base = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage")
-    name = f"oplog_{base}_{fp}"
-    data_dir = os.path.join(root, name, "data")
-    if not os.path.isfile(os.path.join(data_dir, "_SUCCESS")):
+    def build(dest: str) -> None:
         (_synthetic_oplog(spark, sf_dir)
-         .write.mode("overwrite").partitionBy("block_id")
-         .parquet(data_dir))
-    # every other fingerprint of this sf is a superseded full op-log
-    # copy leaking on /tmp (r12 ADVICE); prune on EVERY access so a
-    # sibling that was too young at build time still ages out (r13
-    # review)
-    staging.prune_stale_siblings(root, f"oplog_{base}_", name)
-    return data_dir
+         .write.partitionBy("block_id").parquet(os.path.join(dest, "data")))
+
+    return os.path.join(
+        staging.stage(sf_dir, "oplog", ["orders", "lineitem"], build),
+        "data")
 
 
 def m11_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -572,8 +572,10 @@ def _memo_merges(spark: SparkSession, sf_dir: str, docs: DataFrame,
                  n_merges: int = 5) -> list[tuple[str, str]]:
     import os
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = f"{os.path.abspath(sf_dir)}_{int(st.st_mtime)}_{st.st_size}"
+    from ..sources import staging
+
+    key = (f"{os.path.abspath(sf_dir)}_"
+           f"{staging.source_fingerprint(sf_dir, 'documents')}")
     if key not in _MERGE_MEMO:
         from ..operators.bpe import bpe_merges
 

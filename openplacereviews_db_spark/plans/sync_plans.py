@@ -18,7 +18,6 @@ proves the staging roundtrip is lossless.
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -36,17 +35,6 @@ _SPREAD_LAT = "((event_id % 3400) / 20.0 - 85.0)"
 _SPREAD_LON = "((event_id % 7100) / 20.0 - 177.5)"
 _CLUST_LAT = "(50.0 + (event_id % 50) / 1000.0)"
 _CLUST_LON = "(7.0 + (event_id % 70) / 1000.0)"
-
-
-def _prune_stage(family: str, sf_dir: str, keep: str) -> None:
-    """Drop superseded write-once stages of ``family`` for this sf dir
-    (names are ``{family}_{sfbase}_{mtime}_{size}[...]``): a fresh
-    build proves every other fingerprint is a stale full copy leaking
-    on /tmp (r12 ADVICE; see staging.prune_stale_siblings)."""
-    staging.prune_stale_siblings(
-        os.path.join(tempfile.gettempdir(), "opr_spark_stage"),
-        f"{family}_{os.path.basename(os.path.normpath(sf_dir))}_",
-        keep)
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,21 +110,19 @@ def s5_staged_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     then aggregate the STAGED copy — event counts and payload stats per
     type.  Cache key mirrors SyncRequest.getCacheId; keyed by the sf
     dir so scale factors never cross-contaminate."""
-    # cache id carries the source parquet's mtime+size so a driver
-    # testdata refresh rebuilds the stage (CLAUDE.md stale-cache rule)
-    cid = staging.cache_id(
-        name=(f"events-{os.path.basename(os.path.normpath(sf_dir))}"
-              f"-{staging.source_fingerprint(sf_dir, 'events')}"),
-        date="2021-06-01", bbox=(-180.0, -90.0, 180.0, 90.0))
-    cache_dir = os.path.join(tempfile.gettempdir(), "opr_spark_stage")
+    cid = staging.cache_id(name="events", date="2021-06-01",
+                           bbox=(-180.0, -90.0, 180.0, 90.0))
 
-    def fetch() -> DataFrame:
-        return load_table(spark, "events", sf_dir).select(
-            "event_id", "event_type", "user_id")
+    def fetch(dest: str) -> None:
+        (load_table(spark, "events", sf_dir)
+         .select("event_id", "event_type", "user_id")
+         .write.mode("overwrite").parquet(dest))
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    staged = staging.stage_raw(spark, fetch, cache_dir, cid,
-                               prune_prefix=f"req_events-{base}-")
+    # the staged copy is what every downstream plan scans (splittable,
+    # column-prunable) whatever the fetch source was — the role of the
+    # reference's .osm.gz cache, minus its single-reader gzip bottleneck
+    staged = spark.read.parquet(staging.stage(
+        sf_dir, "raw", ["events"], fetch, key=cid.replace("/", "_")))
     return (
         staged.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"),
@@ -319,22 +305,15 @@ def _xml_escape(s: str) -> str:
 
 def _osm_stage_file(sf_dir: str) -> str:
     """Write-once deterministic .osm file derived from the customer
-    table, keyed on the source parquet's mtime+size (CLAUDE.md rule:
-    driver testdata drifts between rounds; existence-only keys serve
-    stale rows while the oracle reads fresh parquet).  Shared by s1
-    (mapInPandas parse path) and s19 (DataSource connector path)."""
-    tag = (os.path.basename(os.path.normpath(sf_dir))
-           + "_" + staging.source_fingerprint(sf_dir, "customer"))
-    path = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"osm_src_{tag}.osm")
-    if not os.path.exists(path):
-        import pyarrow.parquet as pq
+    table (``staging.stage``).  Shared by s1 (mapInPandas parse path)
+    and s19 (DataSource connector path)."""
+    import pyarrow.parquet as pq
 
+    def build(dest: str) -> None:
         t = pq.read_table(os.path.join(sf_dir, "customer.parquet"),
                           columns=["c_custkey", "c_name", "c_mktsegment"])
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
+        with open(os.path.join(dest, "src.osm"), "w",
+                  encoding="utf-8") as f:
             f.write('<?xml version="1.0" encoding="UTF-8"?>\n<osm>\n')
             for k, name, seg in zip(t["c_custkey"].to_pylist(),
                                     t["c_name"].to_pylist(),
@@ -350,11 +329,9 @@ def _osm_stage_file(sf_dir: str) -> str:
                             f'v="{_xml_escape(seg.lower())}"/>\n')
                 f.write("  </node>\n")
             f.write("</osm>\n")
-        os.replace(tmp, path)
-    # prune on every access (r13 review: build-branch-only pruning
-    # misses siblings under the age guard at build time)
-    _prune_stage("osm_src", sf_dir, os.path.basename(path))
-    return path
+
+    return os.path.join(
+        staging.stage(sf_dir, "osm_src", ["customer"], build), "src.osm")
 
 
 def _s1_projection(amen: DataFrame) -> DataFrame:
@@ -414,18 +391,11 @@ def s2_diff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, which derives the same facts straight from the parquet."""
     from ..sources import osm_xml
 
-    # mtime+size-keyed like s1 — see the CLAUDE.md stale-cache rule
-    tag = (os.path.basename(os.path.normpath(sf_dir))
-           + "_" + staging.source_fingerprint(sf_dir, "customer"))
-    path = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"osm_diff_{tag}.osm")
-    if not os.path.exists(path):
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
+    def build(dest: str) -> None:
         t = pq.read_table(os.path.join(sf_dir, "customer.parquet"),
                           columns=["c_custkey", "c_name", "c_mktsegment"])
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
 
         def node(f, k, name, seg, version, new_section, name_suffix=""):
             lat = (k * 7919) % 16000 / 100.0 - 80.0
@@ -441,7 +411,8 @@ def s2_diff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f.write('      <tag k="" v="junk"/>\n')  # P9 scrub bait
             f.write("    </node>\n")
 
-        with open(tmp, "w", encoding="utf-8") as f:
+        with open(os.path.join(dest, "diff.osm"), "w",
+                  encoding="utf-8") as f:
             f.write('<?xml version="1.0" encoding="UTF-8"?>\n<osm>\n')
             for k, name, seg in zip(t["c_custkey"].to_pylist(),
                                     t["c_name"].to_pylist(),
@@ -464,8 +435,9 @@ def s2_diff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     node(f, k, name, seg, v, new_section=False)
                     f.write('    </old>\n  </action>\n')
             f.write("</osm>\n")
-        os.replace(tmp, path)
-    _prune_stage("osm_diff", sf_dir, os.path.basename(path))
+
+    path = os.path.join(
+        staging.stage(sf_dir, "osm_diff", ["customer"], build), "diff.osm")
     ents = osm_xml.read_osm_xml(spark, path)
     d = osm_xml.diff_pairs(ents)
     return d.select(
@@ -499,8 +471,7 @@ def x22_bucketed_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     write_bucketed)
 
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    loc = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                       "bucketdb")
+    loc = os.path.join(staging.stage_root(), "bucketdb")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS oprbuck LOCATION '{loc}'")
     idx_t, lk_t = f"oprbuck.osmid_index_{tag}", f"oprbuck.lookup_{tag}"
     if not ensure_fresh_bucketed(spark, loc, idx_t, lk_t):
@@ -594,33 +565,19 @@ def s17_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     job, so plan construction stays lazy); the oracle reproduces the
     batch split from the original events table with an explicit NULL
     projection, so it never depends on the staged files."""
-    import os
-    import tempfile
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-    # Cache key includes the source parquet's mtime+size: driver
-    # testdata drifts between rounds (events.ts NANOS->MICROS in r3),
-    # and an existence-only check would silently serve stale staged
-    # rows while the oracle reads the fresh events table.
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    tag = (f"{os.path.basename(os.path.normpath(sf_dir))}"
-           f"_{int(st.st_mtime)}_{st.st_size}")
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"schema_evo_{tag}")
-    if not (os.path.isfile(os.path.join(root, "batch_a.parquet"))
-            and os.path.isfile(os.path.join(root, "batch_b.parquet"))):
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(src,
+    def build(dest: str) -> None:
+        t = pq.read_table(os.path.join(sf_dir, "events.parquet"),
                           columns=["event_id", "user_id", "event_type"])
-        os.makedirs(root, exist_ok=True)
         even = pc.equal(pc.bit_wise_and(t["event_id"], 1), 0)
         pq.write_table(t.filter(even).select(["event_id", "user_id"]),
-                       os.path.join(root, "batch_a.parquet"))
+                       os.path.join(dest, "batch_a.parquet"))
         pq.write_table(t.filter(pc.invert(even)),
-                       os.path.join(root, "batch_b.parquet"))
-    _prune_stage("schema_evo", sf_dir, os.path.basename(root))
+                       os.path.join(dest, "batch_b.parquet"))
+
+    root = staging.stage(sf_dir, "schema_evo", ["events"], build)
     merged = spark.read.option("mergeSchema", "true").parquet(root)
     return (merged.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_rows"),
@@ -749,22 +706,17 @@ def x63_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the source parquet's mtime+size (the stale-cache rule); both the
     stage and the compaction execute at plan build, whitelisted in
     EAGER_BUILD_OK like the other index builders."""
-    fp = staging.source_fingerprint(sf_dir, "events")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"compact_{tag}")
-    small = os.path.join(root, "small")
-    packed = os.path.join(root, "packed")
-    if not os.path.isfile(os.path.join(small, "_SUCCESS")):
+    def build(dest: str) -> None:
+        small = os.path.join(dest, "small")
         (load_table(spark, "events", sf_dir)
          .select("event_id", "event_type", "user_id", "value")
          .repartition(32)
          .write.mode("overwrite").parquet(small))
-    if not os.path.isfile(os.path.join(packed, "_SUCCESS")):
-        staging.compact_dir(spark, small, packed,
+        staging.compact_dir(spark, small, os.path.join(dest, "packed"),
                             target_bytes=1024 * 1024)
-    _prune_stage("compact", sf_dir, os.path.basename(root))
-    return (spark.read.parquet(packed)
+
+    root = staging.stage(sf_dir, "compact", ["events"], build)
+    return (spark.read.parquet(os.path.join(root, "packed"))
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.countDistinct("user_id").alias("n_users"),
@@ -791,26 +743,21 @@ def _partgrid_stage(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     and x76 (dynamic pruning)."""
     import json
 
-    fp = staging.source_fingerprint(sf_dir, "events")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"partgrid_{tag}")
-    data_dir = os.path.join(root, "data")
-    meta_path = os.path.join(root, "meta.json")
-    if not os.path.isfile(meta_path):
+    def build(dest: str) -> None:
         ev = load_table(spark, "events", sf_dir).select(
             (F.expr("unix_timestamp(ts) div 86400") * 86400)
             .alias("day_b"),
             "event_type",
             F.floor(F.col("value") * 1000).cast("bigint").alias("millis"))
-        ev.write.mode("overwrite").partitionBy("day_b").parquet(data_dir)
+        ev.write.mode("overwrite").partitionBy("day_b") \
+            .parquet(os.path.join(dest, "data"))
         min_day = ev.agg(F.min("day_b")).first()[0]
-        os.makedirs(root, exist_ok=True)
-        with open(meta_path, "w") as fh:
+        with open(os.path.join(dest, "meta.json"), "w") as fh:
             json.dump({"min_day": int(min_day)}, fh)
-    _prune_stage("partgrid", sf_dir, os.path.basename(root))
-    with open(meta_path) as fh:
-        return data_dir, json.load(fh)["min_day"]
+
+    root = staging.stage(sf_dir, "partgrid", ["events"], build)
+    with open(os.path.join(root, "meta.json")) as fh:
+        return os.path.join(root, "data"), json.load(fh)["min_day"]
 
 
 def x74_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -932,8 +879,7 @@ def x75_smb_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     write_bucketed)
 
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    loc = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                       "bucketdb")
+    loc = os.path.join(staging.stage_root(), "bucketdb")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS oprbuck LOCATION '{loc}'")
     o_t, l_t = f"oprbuck.orders_{tag}", f"oprbuck.lineitem_{tag}"
     if not ensure_fresh_bucketed(spark, loc, o_t, l_t):
@@ -997,19 +943,17 @@ def s18_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregating rollup — the text parse itself is the JVM's
     vectorized CSV/JSON readers, never Python.
     """
-    fp = staging.source_fingerprint(sf_dir, "customer")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"formats_{tag}")
-    csv_dir = os.path.join(root, "csv")
-    json_dir = os.path.join(root, "json")
     cust = load_table(spark, "customer", sf_dir).select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-    if not os.path.isfile(os.path.join(csv_dir, "_SUCCESS")):
-        cust.write.mode("overwrite").option("header", True).csv(csv_dir)
-    if not os.path.isfile(os.path.join(json_dir, "_SUCCESS")):
-        cust.write.mode("overwrite").json(json_dir)
-    _prune_stage("formats", sf_dir, os.path.basename(root))
+
+    def build(dest: str) -> None:
+        cust.write.mode("overwrite").option("header", True) \
+            .csv(os.path.join(dest, "csv"))
+        cust.write.mode("overwrite").json(os.path.join(dest, "json"))
+
+    root = staging.stage(sf_dir, "formats", ["customer"], build)
+    csv_dir = os.path.join(root, "csv")
+    json_dir = os.path.join(root, "json")
     # multiLine: a quoted field carrying a NEWLINE is torn into two
     # corrupt records by the default line-splitting reader (pinned by
     # tests/test_sync_infra.py hostile-content roundtrip).  Cost: a
@@ -1081,15 +1025,11 @@ def s20_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: co-partitioned sort-merge join on the 8-byte key into
     one partial-aggregating rollup, same as s18.
     """
-    fp = staging.source_fingerprint(sf_dir, "customer")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    orc_dir = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                           f"orc_{tag}")
     cust = load_table(spark, "customer", sf_dir).select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-    if not os.path.isfile(os.path.join(orc_dir, "_SUCCESS")):
-        cust.write.mode("overwrite").orc(orc_dir)
-    _prune_stage("orc", sf_dir, os.path.basename(orc_dir))
+    orc_dir = staging.stage(
+        sf_dir, "orc", ["customer"],
+        lambda dest: cust.write.mode("overwrite").orc(dest))
     orc_rt = (spark.read.schema(_S18_SCHEMA).orc(orc_dir)
               .select("c_custkey",
                       F.col("c_name").alias("o_name"),
@@ -1141,32 +1081,24 @@ def s21_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import json as _json
 
-    fp = staging.source_fingerprint(sf_dir, "customer")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    path = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"badjson_{tag}", "rows.jsonl")
-    if not os.path.isfile(path):
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
+    def build(dest: str) -> None:
         t = pq.read_table(
             os.path.join(sf_dir, "customer.parquet"),
             columns=["c_custkey", "c_name", "c_acctbal", "c_mktsegment"])
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
+        with open(os.path.join(dest, "rows.jsonl"), "w") as fh:
             for r in t.to_pylist():
                 line = _json.dumps(r, ensure_ascii=False)
                 if r["c_custkey"] % 10 == 0:
                     line = "{X" + line[1:]  # unparseable, text preserved
                 fh.write(line + "\n")
-        os.replace(tmp, path)
-    _prune_stage("badjson", sf_dir,
-                 os.path.basename(os.path.dirname(path)))
+
     schema = (_S18_SCHEMA + ", _corrupt_record string")
     rows = (spark.read.schema(schema)
             .option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .json(os.path.dirname(path)))
+            .json(staging.stage(sf_dir, "badjson", ["customer"], build)))
     return (rows.groupBy("c_mktsegment")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.sum(F.floor(F.col("c_acctbal") * 100).cast("bigint"))

@@ -55,6 +55,10 @@ def get_spark(app_name: str = "openplacereviews-db-spark",
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.session.timeZone", "UTC")
+        # events.ts has shipped as TIMESTAMP(NANOS), which Spark's
+        # parquet reader rejects unless it reads nanos as a long
+        # (sources/testdata.py:normalize_events_ts converts either form)
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.shuffle.partitions",
                 str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")

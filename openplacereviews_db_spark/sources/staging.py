@@ -10,14 +10,22 @@ query reads the staged copy — at 100 TB this is the raw zone of a
 lakehouse layout (fetch once, scan many, schema-on-write, column
 pruning on re-reads — none of which the reference's gzip text blobs
 can do).
+
+:func:`stage` is the package's one staging rule: every artifact derived
+from the driver testdata (raw projections, split stream feeds, text and
+ORC roundtrip copies, indexes, the op log) is built through it, so this
+module alone decides where a stage lives, what its key is, when it is
+complete, and when it is pruned.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+import shutil
+import tempfile
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def cache_id(name: str, date: str,
@@ -44,13 +52,77 @@ def cache_id(name: str, date: str,
 
 
 def source_fingerprint(sf_dir: str, table: str) -> str:
-    """``{mtime}_{size}`` of ``sf_dir/table.parquet`` — embed this in
-    every write-once staging path derived from driver testdata.  The
-    driver regenerates parquet between rounds (events.ts changed type
-    in r3); an existence-only cache check would then serve stale staged
-    rows while the oracle reads the fresh table."""
+    """``{mtime}_{size}`` of ``sf_dir/table.parquet`` — the key every
+    stage derived from driver testdata carries.  The driver regenerates
+    parquet between rounds (events.ts changed type once); an
+    existence-only cache check would then serve stale staged rows while
+    the oracle reads the fresh table."""
     st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
     return f"{int(st.st_mtime)}_{st.st_size}"
+
+
+def stage_root() -> str:
+    """The one directory every stage lives under — read at call time,
+    so a monkeypatched ``tempfile.gettempdir`` moves it."""
+    return os.path.join(tempfile.gettempdir(), "opr_spark_stage")
+
+
+def _stage_name(sf_dir: str, family: str, tables: Sequence[str],
+                key: str) -> tuple[str, str]:
+    """``(prune prefix, stage name)``.  The prefix stops at the sf
+    basename, so a new key (e.g. a changed knob set) supersedes the old
+    stage exactly like a testdata refresh does.  The ``.stage`` suffix
+    is a layout no earlier staging code wrote: a leftover dir from an
+    older scheme never reads as complete under this rule."""
+    prefix = f"{family}_{os.path.basename(os.path.normpath(sf_dir))}_"
+    fps = "_".join(source_fingerprint(sf_dir, t) for t in tables)
+    return prefix, f"{prefix}{key + '_' if key else ''}{fps}.stage"
+
+
+def stage_path(sf_dir: str, family: str, tables: Sequence[str],
+               key: str = "") -> str:
+    """Where :func:`stage` puts ``family``'s stage for this sf dir and
+    the current source fingerprints (it does not build anything)."""
+    return os.path.join(stage_root(),
+                        _stage_name(sf_dir, family, tables, key)[1])
+
+
+def stage(sf_dir: str, family: str, tables: Sequence[str],
+          build: Callable[[str], None], key: str = "") -> str:
+    """Write-once staging of a derived artifact; returns its directory.
+
+    The directory is named ``{family}_{sf basename}_[{key}_]`` plus the
+    ``{mtime}_{size}`` of each source ``tables`` parquet, under
+    :func:`stage_root`.  A stage is complete iff that directory exists:
+    ``build(tmp)`` fills a private temp sibling, and one ``os.rename``
+    puts it in place, so a build that dies part-way leaves nothing
+    under the final name and the next call rebuilds.  Two callers
+    building the same stage at once each build their own copy; the
+    loser of the rename deletes its copy and returns the winner's.
+
+    Every call prunes superseded siblings (same family and sf, other
+    key or fingerprint) through :func:`prune_stale_siblings` — on a
+    cache hit too, since a sibling still under the age guard at build
+    time would otherwise never be pruned.
+    """
+    root = stage_root()
+    prefix, name = _stage_name(sf_dir, family, tables, key)
+    path = os.path.join(root, name)
+    if not os.path.isdir(path):
+        os.makedirs(root, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=f"tmp.{name}.", dir=root)
+        try:
+            build(tmp)
+            try:
+                os.rename(tmp, path)
+            except OSError:
+                if not os.path.isdir(path):
+                    raise
+                # a concurrent builder renamed its complete copy first
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    prune_stale_siblings(root, prefix, name)
+    return path
 
 
 def prune_stale_siblings(root: str, prefix: str, keep: str,
@@ -58,22 +130,19 @@ def prune_stale_siblings(root: str, prefix: str, keep: str,
     """Remove superseded write-once staging entries: every child of
     ``root`` whose name starts with ``prefix`` but is not ``keep``.
 
-    Staged dirs are keyed on their source parquet's mtime+size, so a
-    driver-round testdata refresh makes a NEW sibling and orphans the
-    old one — each orphan is a full staged copy leaking on /tmp (the
-    same disk-pressure class ``release_shuffles`` exists to fight; r12
-    ADVICE).  Call this right after a fresh build: freshness proves
-    every other fingerprint is stale.  Handles files and directories
-    (the s1 ``osm_src_*.osm`` stage is a file).
+    A stage's name carries its sources' fingerprints, so a testdata
+    refresh makes a NEW sibling and orphans the old one — each orphan
+    is a full staged copy leaking on /tmp (the disk-pressure class
+    ``release_shuffles`` exists to fight).  Handles files and
+    directories.
 
     ``min_age_s``: siblings modified within this window are left alone
     — a concurrently-live session launched against the PREVIOUS
     testdata may still hold lazy plans over its staged copy, and
     deleting files under a registered scan fails that session's next
-    action mid-query (r13 review).  Fingerprints only drift when the
-    driver regenerates parquet between rounds, so anything older than
-    an hour with a superseded fingerprint is genuinely dead."""
-    import shutil
+    action mid-query.  Fingerprints only drift when the driver
+    regenerates parquet between rounds, so anything older than an hour
+    with a superseded fingerprint is genuinely dead."""
     import time
 
     try:
@@ -96,31 +165,6 @@ def prune_stale_siblings(root: str, prefix: str, keep: str,
             pass  # concurrent session may have pruned it first
 
 
-def stage_raw(spark: SparkSession, fetch: Callable[[], DataFrame],
-              cache_dir: str, cid: str,
-              prune_prefix: str | None = None) -> DataFrame:
-    """Write-once staging: if ``cache_dir/cid`` holds a completed
-    parquet write (``_SUCCESS`` marker), read it; otherwise run
-    ``fetch()`` once, stage its result, and read the staged copy.
-
-    Always returns the STAGED frame, so downstream plans scan parquet
-    (splittable, column-prunable) regardless of what the fetch source
-    was — the exact role of the reference's .osm.gz cache, minus its
-    single-reader gzip bottleneck.
-    """
-    name = cid.replace("/", "_")
-    path = os.path.join(cache_dir, name)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        fetch().write.mode("overwrite").parquet(path)
-    if prune_prefix is not None:
-        # on EVERY access, not just fresh builds: a sibling superseded
-        # less than min_age_s before the fresh build survives the
-        # age guard then, and no later build would ever re-prune it
-        # (r13 review) — the listdir is pennies
-        prune_stale_siblings(cache_dir, prune_prefix, name)
-    return spark.read.parquet(path)
-
-
 def compact_dir(spark: SparkSession, src_dir: str, dest_dir: str,
                 target_bytes: int = 128 * 1024 * 1024) -> int:
     """Small-file compaction (X63) — the lakehouse OPTIMIZE analog for
@@ -137,8 +181,8 @@ def compact_dir(spark: SparkSession, src_dir: str, dest_dir: str,
     roundtrip oracle (aggregate of the compacted copy == aggregate of
     the source).  ``coalesce`` (not ``repartition``): target file
     count is BELOW the source parallelism, so Spark merges input
-    splits without a shuffle.  Atomic swap via staged write +
-    ``_SUCCESS`` check, same discipline as :func:`stage_raw`.
+    splits without a shuffle.  Run it inside a :func:`stage` build so
+    the compacted copy appears atomically.
 
     Returns the number of data files written.
     """

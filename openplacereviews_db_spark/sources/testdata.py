@@ -21,10 +21,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize the events.ts column to TIMESTAMP regardless of how the
-    parquet shipped it.  events.ts has shipped as TIMESTAMP(NANOS) (which
-    Spark's parquet reader rejects — read as epoch-nanos long with
-    ``spark.sql.legacy.parquet.nanosAsLong``, truncate to micros like
-    DuckDB) and as TIMESTAMP(MICROS) (read as NTZ; cast to session-TZ
+    parquet shipped it.  events.ts has shipped as TIMESTAMP(NANOS) (read
+    as an epoch-nanos long under ``spark.sql.legacy.parquet.nanosAsLong``,
+    which ``session.get_spark`` sets; truncate to micros like DuckDB)
+    and as TIMESTAMP(MICROS) (read as NTZ; cast to session-TZ
     timestamp — UTC session makes it the same instant).  Shared by the
     batch loader AND the streaming source (streaming/pipelines.py) so
     both paths always agree on the instant."""
@@ -43,7 +43,6 @@ def load_table(spark: SparkSession, name: str,
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return normalize_events_ts(spark.read.parquet(path))
     return spark.read.parquet(path)
 

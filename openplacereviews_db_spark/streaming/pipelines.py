@@ -23,6 +23,7 @@ batch operators (changelog fold, dedup, projections) are reused inside
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -177,8 +178,8 @@ def _run_to_memory(agg: DataFrame, output_mode: str,
     caller's session, so nothing the caller's thread can reach sets it
     in time except the caller's own conf (a foreachBatch body, by
     contrast, sets its own batch session — ``_neardup_batch``).  A
-    second session is no cheaper fix: ``spark.newSession()`` drops the
-    caller's runtime confs (the UTC timezone, ``nanosAsLong``); a
+    second session is no cheaper fix: ``spark.newSession()`` drops
+    every conf the caller set at runtime; a
     stream started on a ``cloneSession()`` copy is invisible to
     StreamingQueryListeners registered on the caller's session; and
     each such stream leaves two listeners behind on the SparkContext
@@ -222,7 +223,6 @@ def _stream_events_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.testdata import normalize_events_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
     schema = spark.read.parquet(path).schema
     # the file source requires a directory; narrow it to the events file
@@ -303,87 +303,90 @@ def user_totals_once(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("s.total_millis").alias("total_millis"))
 
 
-def _stage_parity_split(sf_dir: str, prefix: str) -> tuple[str, str]:
-    """Write-once staging of the documents corpus as TWO parquet files
-    split on doc_id parity (batch_a = even, batch_b = odd), under a
-    root whose name embeds the source parquet's mtime+size — driver
-    testdata drifts between rounds, and an existence-only cache check
-    silently serves stale rows (the s17 lesson, ADVICE r5).  Returns
-    ``(root, src)``; pyarrow IO only, so plan construction stays lazy.
-    """
+def _write_split(t, first, dest: str) -> None:
+    """The one two-file split writer behind every staged stream feed:
+    pyarrow table ``t`` lands under ``dest/src`` as
+    ``00000_batch_a.parquet`` (rows where the boolean array ``first``
+    holds) and ``00001_batch_b.parquet`` (the rest).  The sortable
+    sequence prefix makes the batch order structural (lexicographic =
+    ingest order); :func:`_pin_batch_order` then spaces the mtimes that
+    FileStreamSource actually orders by — the name is the belt, the
+    pinned mtimes are the braces."""
     import os
-    import tempfile
 
-    src_parquet = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src_parquet)
-    # _v2: layout version (sequence-prefixed split names) — keys any
-    # cached dir with the old unprefixed names out of reuse
-    tag = (f"v2_{os.path.basename(os.path.normpath(sf_dir))}"
-           f"_{int(st.st_mtime)}_{st.st_size}")
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"{prefix}_{tag}")
-    src = os.path.join(root, "src")
-    if not _stage_is_complete(root):
-        import shutil as _sh
-        _sh.rmtree(src, ignore_errors=True)
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-        t = pq.read_table(src_parquet)
-        os.makedirs(src, exist_ok=True)
-        even = pc.equal(pc.bit_wise_and(t["doc_id"], 1), 0)
-        # Sortable sequence prefix makes the intended batch order
-        # structural (lexicographic = ingest order), independent of the
-        # mtime pinning below (FileStreamSource itself orders by mtime;
-        # the name is the belt, the pinned mtimes are the braces).
-        a = os.path.join(src, "00000_batch_a.parquet")
-        b = os.path.join(src, "00001_batch_b.parquet")
-        pq.write_table(t.filter(even), a)
-        pq.write_table(t.filter(pc.invert(even)), b)
-        _pin_batch_order(a, b)
-        _mark_stage_complete(root, tag)
-    else:
-        _prune_stale_stage(root, tag)  # cache hit: age out leftovers
-    return root, src
+    src = os.path.join(dest, "src")
+    os.makedirs(src)
+    a = os.path.join(src, "00000_batch_a.parquet")
+    b = os.path.join(src, "00001_batch_b.parquet")
+    pq.write_table(t.filter(first), a)
+    pq.write_table(t.filter(pc.invert(first)), b)
+    _pin_batch_order(a, b)
 
 
-def _prune_stale_stage(root: str, tag: str) -> None:
-    """Drop superseded write-once split stages: ``root`` is
-    ``/tmp/opr_spark_stage/{prefix}_{tag}`` with ``tag`` ending in the
-    source parquet's ``{mtime}_{size}`` fingerprint; a fresh build
-    proves every same-prefix sibling with a different fingerprint is a
-    stale full copy of the staged feed leaking on /tmp (r12 ADVICE —
-    the disk-pressure class release_shuffles exists to fight)."""
+def _parity_split(table: str, id_col: str, sf_dir: str, dest: str) -> None:
+    """``table`` split on ``id_col`` parity: evens are batch 0, odds
+    batch 1."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
+    _write_split(t, pc.equal(pc.bit_wise_and(t[id_col], 1), 0), dest)
+
+
+def _time_split(sf_dir: str, dest: str) -> None:
+    """The events table split at the TIME midpoint (batch 0 strictly
+    before, batch 1 at/after) — the CDC-shaped feed for dimension
+    maintenance: micro-batches arrive in event-time order, so every
+    version open at the cut must be extended or closed by the later
+    batch (the cross-batch MERGE path).  ``ts`` is pre-normalized to
+    epoch-micros BIGINT (``ts_us``) so the streaming schema is immune
+    to the driver's NANOS/MICROS drift."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(sf_dir, "events.parquet"), columns=[
+        "event_id", "user_id", "event_type", "ts"])
+    # safe=False: a NANOS-grid source must TRUNCATE to micros like
+    # normalize_events_ts/DuckDB do — the default safe cast would raise
+    # ArrowInvalid instead
+    ts_us = pc.cast(pc.cast(t["ts"], pa.timestamp("us"), safe=False),
+                    pa.int64())
+    t = t.drop_columns(["ts"]).append_column("ts_us", ts_us)
+    mid = (pc.min(ts_us).as_py() + pc.max(ts_us).as_py()) // 2
+    _write_split(t, pc.less(t["ts_us"], mid), dest)
+
+
+#: each streaming query's staged two-file feed: (source table, split).
+#: One stage per query, not per split: the stage dir also holds that
+#: query's per-call working dirs (index/, chk/, ...).
+_FEEDS: dict[str, tuple[str, Callable[[str, str], None]]] = {
+    "neardup": ("documents", partial(_parity_split, "documents", "doc_id")),
+    "exactdd": ("documents", partial(_parity_split, "documents", "doc_id")),
+    "strjoin": ("events", partial(_parity_split, "events", "event_id")),
+    "hllstream": ("events", partial(_parity_split, "events", "event_id")),
+    "scd2": ("events", _time_split),
+}
+
+
+def stage_feed(sf_dir: str, family: str) -> tuple[str, str]:
+    """Stage ``family``'s two-file micro-batch feed write-once through
+    ``staging.stage`` (pyarrow IO only, so plan construction stays
+    lazy); returns ``(stage dir, feed dir)``."""
     import os
 
     from ..sources import staging
 
-    name = os.path.basename(root)
-    fp = "_".join(tag.split("_")[-2:])  # "<mtime>_<size>"
-    staging.prune_stale_siblings(
-        os.path.dirname(root), name[: len(name) - len(fp)], name)
-
-
-def _stage_is_complete(root: str) -> bool:
-    """Completion-marker check for the write-once split stagers.  A
-    file-count guard reads a TORN last parquet (ENOSPC/kill mid-write
-    — the at-scale harnesses run at the /tmp disk limit) as a complete
-    stage forever; the marker lands only after every split file and
-    its mtime pinning are done (r13 review)."""
-    import os
-
-    return os.path.isfile(os.path.join(root, "_staged_ok"))
-
-
-def _mark_stage_complete(root: str, tag: str) -> None:
-    """Stamp the marker, then prune superseded-fingerprint siblings
-    (callers also prune on cache-hit accesses so an under-age sibling
-    still ages out — r13 review)."""
-    import os
-
-    with open(os.path.join(root, "_staged_ok"), "w") as fh:
-        fh.write("ok")
-    _prune_stale_stage(root, tag)
+    table, split = _FEEDS[family]
+    root = staging.stage(sf_dir, family, [table], partial(split, sf_dir))
+    return root, os.path.join(root, "src")
 
 
 def _pin_batch_order(*paths: str) -> None:
@@ -419,7 +422,7 @@ def neardup_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.sizing import path_bytes, small_exchange_parts
 
-    root, src = _stage_parity_split(sf_dir, "neardup")
+    root, src = stage_feed(sf_dir, "neardup")
     index_dir = os.path.join(root, "index")
     chk_dir = os.path.join(root, "chk")
     pairs_dir = os.path.join(root, "pairs")
@@ -639,7 +642,7 @@ def exact_dedup_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    root, src = _stage_parity_split(sf_dir, "exactdd")
+    root, src = stage_feed(sf_dir, "exactdd")
     index_dir = os.path.join(root, "index")
     counts_dir = os.path.join(root, "counts")
     chk_dir = os.path.join(root, "chk")
@@ -746,42 +749,6 @@ def _exact_dedup_batch(index_dir: str, counts_dir: str):
     return on_batch
 
 
-def _stage_events_split(sf_dir: str, prefix: str) -> tuple[str, str]:
-    """Write-once staging of the EVENTS table as two parquet files
-    split on event_id parity — the stream-join feed (views arrive in
-    batch 1, clicks in batch 2, so every match is cross-batch).  Cache
-    keyed on the source parquet's mtime+size (the CLAUDE.md
-    stale-cache rule); pyarrow IO only, plan construction stays lazy."""
-    import os
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src_parquet)
-    tag = (f"v2_{os.path.basename(os.path.normpath(sf_dir))}"
-           f"_{int(st.st_mtime)}_{st.st_size}")
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"{prefix}_{tag}")
-    src = os.path.join(root, "src")
-    if not _stage_is_complete(root):
-        import shutil as _sh
-        _sh.rmtree(src, ignore_errors=True)
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(src_parquet)
-        os.makedirs(src, exist_ok=True)
-        even = pc.equal(pc.bit_wise_and(t["event_id"], 1), 0)
-        a = os.path.join(src, "00000_batch_a.parquet")
-        b = os.path.join(src, "00001_batch_b.parquet")
-        pq.write_table(t.filter(even), a)
-        pq.write_table(t.filter(pc.invert(even)), b)
-        _pin_batch_order(a, b)
-        _mark_stage_complete(root, tag)
-    else:
-        _prune_stale_stage(root, tag)  # cache hit: age out leftovers
-    return root, src
-
-
 def stream_join_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X62 — watermarked stream-stream interval join run to
     completion: a views stream (even event_ids) inner-joined to a
@@ -803,9 +770,7 @@ def stream_join_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.testdata import normalize_events_ts
 
-    root, src = _stage_events_split(sf_dir, "strjoin")
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    _, src = stage_feed(sf_dir, "strjoin")
     schema = spark.read.parquet(src).schema
 
     def side(parity: int, id_alias: str, ts_alias: str,
@@ -885,7 +850,7 @@ def hll_stream_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import sketches as SK
 
-    root, src = _stage_events_split(sf_dir, "hllstream")
+    root, src = stage_feed(sf_dir, "hllstream")
     regs_dir = os.path.join(root, "regs")
     chk_dir = os.path.join(root, "chk")
     for d in (regs_dir, chk_dir):
@@ -913,58 +878,6 @@ def hll_stream_once(spark: SparkSession, sf_dir: str) -> DataFrame:
               .groupBy("grp", "bucket")
               .agg(F.max("rho_max").alias("rho_max")))
     return SK.hll_finalize(merged)
-
-
-def _stage_time_split(sf_dir: str, prefix: str) -> tuple[str, str]:
-    """Write-once staging of the EVENTS table as two parquet files split
-    at the TIME midpoint (batch_a strictly before, batch_b at/after) —
-    the CDC-shaped feed for dimension maintenance: micro-batches arrive
-    in event-time order, so every version open at the cut must be
-    extended or closed by the later batch (the cross-batch MERGE path).
-
-    ``ts`` is pre-normalized to epoch-micros BIGINT (``ts_us``) at
-    staging so the streaming schema is immune to the driver's
-    NANOS/MICROS drift.  Cache keyed on source mtime+size; sequence-
-    prefixed names + pinned mtimes per the split-order discipline."""
-    import os
-    import tempfile
-
-    src_parquet = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src_parquet)
-    tag = (f"v2_{os.path.basename(os.path.normpath(sf_dir))}"
-           f"_{int(st.st_mtime)}_{st.st_size}")
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"{prefix}_{tag}")
-    src = os.path.join(root, "src")
-    if not _stage_is_complete(root):
-        import shutil as _sh
-        _sh.rmtree(src, ignore_errors=True)
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(src_parquet, columns=[
-            "event_id", "user_id", "event_type", "ts"])
-        # safe=False: a NANOS-grid source (the r3 drift) must TRUNCATE
-        # to micros like normalize_events_ts/DuckDB do — the default
-        # safe cast would raise ArrowInvalid instead
-        ts_us = pc.cast(pc.cast(t["ts"], pa.timestamp("us"), safe=False),
-                        pa.int64())
-        t = t.drop_columns(["ts"]).append_column("ts_us", ts_us)
-        lo = pc.min(t["ts_us"]).as_py()
-        hi = pc.max(t["ts_us"]).as_py()
-        mid = (lo + hi) // 2
-        os.makedirs(src, exist_ok=True)
-        early = pc.less(t["ts_us"], mid)
-        a = os.path.join(src, "00000_batch_a.parquet")
-        b = os.path.join(src, "00001_batch_b.parquet")
-        pq.write_table(t.filter(early), a)
-        pq.write_table(t.filter(pc.invert(early)), b)
-        _pin_batch_order(a, b)
-        _mark_stage_complete(root, tag)
-    else:
-        _prune_stale_stage(root, tag)  # cache hit: age out leftovers
-    return root, src
 
 
 _SCD2_DDL = ("user_id long, version long, event_type string, "
@@ -1087,7 +1000,7 @@ def scd2_upsert_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    root, src = _stage_time_split(sf_dir, "scd2")
+    root, src = stage_feed(sf_dir, "scd2")
     snap_dir = os.path.join(root, "snapshot")
     chk_dir = os.path.join(root, "chk")
     # also sweep swap residue (.old, epoch-staged dirs) from a killed

@@ -42,7 +42,6 @@ def test_x74_partition_pruning_reads_one_day(spark, sf_dir):
     day's directory."""
     import json
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -50,11 +49,8 @@ def test_x74_partition_pruning_reads_one_day(spark, sf_dir):
         x74_partition_prune)
     from openplacereviews_db_spark.sources import staging
 
-    fp = staging.source_fingerprint(sf_dir, "events")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    root = os.path.join(tempfile.gettempdir(), "opr_spark_stage",
-                        f"partgrid_{tag}")
     df = x74_partition_prune(spark, sf_dir)
+    root = staging.stage_path(sf_dir, "partgrid", ["events"])
     with open(os.path.join(root, "meta.json")) as fh:
         min_day = json.load(fh)["min_day"]
 

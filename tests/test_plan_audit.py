@@ -469,6 +469,37 @@ def test_every_package_def_is_reachable():
     assert not dead, "unreachable package defs:\n" + "\n".join(dead)
 
 
+def test_staging_rule_lives_in_staging():
+    """Where a stage lives and what keys it belong to
+    ``sources/staging.py`` alone: no other package module may spell the
+    staging root (a string literal holding ``opr_spark_stage``) or read
+    ``st_mtime`` (an inline source key).  A fork of either grows its own
+    completeness check and prune prefix, which is how the package once
+    had five of each."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(entrymod.__file__).resolve().parent / "openplacereviews_db_spark"
+    forks = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg.parent)
+        if rel.as_posix() == "openplacereviews_db_spark/sources/staging.py":
+            continue
+        tree = ast.parse(path.read_text())
+        docs = {id(n.body[0].value) for n in ast.walk(tree)
+                if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                                  ast.AsyncFunctionDef))
+                and n.body and isinstance(n.body[0], ast.Expr)}
+        for n in ast.walk(tree):
+            if (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                    and "opr_spark_stage" in n.value
+                    and id(n) not in docs):
+                forks.append(f"{rel}:{n.lineno} staging root literal")
+            elif isinstance(n, ast.Attribute) and n.attr == "st_mtime":
+                forks.append(f"{rel}:{n.lineno} inline st_mtime key")
+    assert not forks, "staging forks outside staging.py:\n" + "\n".join(forks)
+
+
 #: documented plan-shape claims for the scoring operators: the physical
 #: plan must actually carry the property the docstring advertises
 def test_classifier_is_zero_shuffle(spark, sf_dir):

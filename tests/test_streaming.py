@@ -329,41 +329,6 @@ def test_stream_join_crosses_batches(spark, tmp_path):
     assert rows == [(1, 100, 101)], rows
 
 
-def test_prune_stale_stage_strips_fingerprint(tmp_path):
-    """_prune_stale_stage derives the sibling prefix by stripping the
-    tag's trailing mtime_size fingerprint — underscores inside the sf
-    basename (opr_sf10) or the version tag (v1n4) must not confuse it,
-    other families and the kept stage must survive, and the min-age
-    live-reader guard must hold for recent siblings."""
-    import os
-    import time
-
-    from openplacereviews_db_spark.streaming.pipelines import (
-        _prune_stale_stage)
-
-    root = tmp_path
-    tag = "v1n4_opr_sf10_200_2"
-    keep = root / f"sessbnd_{tag}"
-    stale = root / "sessbnd_v1n4_opr_sf10_100_1"
-    other_n = root / "sessbnd_v1n2_opr_sf10_100_1"   # different split n
-    other_fam = root / "neardup_v1n4_opr_sf10_100_1"
-    for d in (keep, stale, other_n, other_fam):
-        d.mkdir()
-    old = time.time() - 7200
-    for d in (stale, other_n, other_fam):
-        os.utime(d, (old, old))
-    _prune_stale_stage(str(keep), tag)
-    left = sorted(os.listdir(root))
-    assert left == ["neardup_v1n4_opr_sf10_100_1",
-                    "sessbnd_v1n2_opr_sf10_100_1",
-                    f"sessbnd_{tag}"]
-    # a RECENT superseded sibling survives the live-reader guard
-    recent = root / "sessbnd_v1n4_opr_sf10_150_9"
-    recent.mkdir()
-    _prune_stale_stage(str(keep), tag)
-    assert recent.is_dir()
-
-
 def test_parity_split_order_survives_equal_mtimes(spark, tmp_path, monkeypatch):
     """The staged split's ingest order must be structural: file names
     carry a sortable sequence prefix AND _pin_batch_order spaces the
@@ -389,7 +354,7 @@ def test_parity_split_order_survives_equal_mtimes(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         "tempfile.gettempdir", lambda: str(tmp_path / "stage"))
 
-    root, src = SP._stage_parity_split(str(sf), "ordercheck")
+    root, src = SP.stage_feed(str(sf), "neardup")
     names = sorted(os.listdir(src))
     assert names == ["00000_batch_a.parquet", "00001_batch_b.parquet"]
     mtimes = [os.stat(os.path.join(src, n)).st_mtime for n in names]
@@ -672,7 +637,7 @@ def test_scd2_kill_restart_resumes_from_checkpoint(spark):
     from openplacereviews_db_spark.streaming import pipelines as SP
 
     sf = "/root/testdata/sf0.001"
-    root, src = SP._stage_time_split(sf, "scd2")
+    root, src = SP.stage_feed(sf, "scd2")
     snap = os.path.join(root, "snapshot_killrestart")
     chk = os.path.join(root, "chk_killrestart")
     for d in [snap, chk, snap + ".old"] + glob.glob(snap + ".epoch-*"):
@@ -735,7 +700,7 @@ def test_scd2_once_sweeps_stale_swap_dirs(spark):
 
     sf = "/root/testdata/sf0.001"
     base = sorted(map(tuple, SP.scd2_upsert_once(spark, sf).collect()))
-    root, _ = SP._stage_time_split(sf, "scd2")
+    root, _ = SP.stage_feed(sf, "scd2")
     snap = os.path.join(root, "snapshot")
     bogus = spark.createDataFrame(
         [(999999, 1, "ZZZ", 0, None, 999, 1)], SP._SCD2_DDL)
@@ -829,7 +794,7 @@ def test_exact_dedup_kill_restart_resumes_from_checkpoint(spark):
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
-    root, src = SP._stage_parity_split(sf, "exactdd")
+    root, src = SP.stage_feed(sf, "exactdd")
     index_dir = os.path.join(root, "index_killrestart")
     counts_dir = os.path.join(root, "counts_killrestart")
     chk = os.path.join(root, "chk_killrestart")
@@ -866,7 +831,7 @@ def test_neardup_kill_restart_resumes_from_checkpoint(spark):
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
-    root, src = SP._stage_parity_split(sf, "neardup")
+    root, src = SP.stage_feed(sf, "neardup")
     index_dir = os.path.join(root, "index_killrestart")
     pairs_dir = os.path.join(root, "pairs_killrestart")
     chk = os.path.join(root, "chk_killrestart")
@@ -992,3 +957,25 @@ def test_neardup_once_failure_leaves_caller_conf(spark, sf_dir,
     finally:
         spark.conf.set(key, "8")
     assert seen == [("32", "8")]
+
+
+def test_events_readers_leave_nanos_conf_unset(spark, sf_dir):
+    """``nanosAsLong`` is a session-builder conf, not a runtime write:
+    with it unset on the caller's session, loading events and running
+    the two streaming events readers must leave it unset (the local
+    testdata is timestamp[us], so none of these reads needs it)."""
+    from openplacereviews_db_spark.sources.testdata import load_table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        unset = spark.conf.get(key)
+        assert load_table(spark, "events", sf_dir).count() > 0
+        assert spark.conf.get(key) == unset
+        assert SP.event_rollup_once(spark, sf_dir).count() > 0
+        assert spark.conf.get(key) == unset
+        assert SP.stream_join_once(spark, sf_dir).count() > 0
+        assert spark.conf.get(key) == unset
+    finally:
+        spark.conf.set(key, before)

@@ -17,18 +17,40 @@ def test_cache_id_format():
     assert cid2 == "diff_cnt_amenity/d1-d0_0.2,0,1,10.5"
 
 
-def test_stage_raw_write_once(spark, tmp_path):
+def _tiny_sf(tmp_path, name: str = "sf0.01") -> str:
+    """An sf dir holding one source table ``t.parquet`` to key stages on."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = tmp_path / name
+    sf.mkdir()
+    pq.write_table(pa.table({"x": [1, 2, 3]}), sf / "t.parquet")
+    return str(sf)
+
+
+def _stage_root_in(tmp_path, monkeypatch) -> str:
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path / "tmp"))
+    return staging.stage_root()
+
+
+def test_stage_write_once(spark, tmp_path, monkeypatch):
+    sf = _tiny_sf(tmp_path)
+    _stage_root_in(tmp_path, monkeypatch)
     calls = []
 
-    def fetch():
+    def build(dest):
         calls.append(1)
-        return spark.range(5).selectExpr("id", "id * 2 AS v")
+        spark.range(5).selectExpr("id", "id * 2 AS v") \
+            .write.mode("overwrite").parquet(dest)
 
-    a = staging.stage_raw(spark, fetch, str(tmp_path), "req_x/d_0,0,1,1")
-    assert a.count() == 5
-    b = staging.stage_raw(spark, fetch, str(tmp_path), "req_x/d_0,0,1,1")
-    assert b.count() == 5
-    assert len(calls) == 1  # second read served from the staged zone
+    cid = staging.cache_id("x", "d", bbox=(0.0, 0.0, 1.0, 1.0))
+    a = staging.stage(sf, "raw", ["t"], build, key=cid.replace("/", "_"))
+    assert spark.read.parquet(a).count() == 5
+    b = staging.stage(sf, "raw", ["t"], build, key=cid.replace("/", "_"))
+    assert b == a == staging.stage_path(sf, "raw", ["t"],
+                                        key=cid.replace("/", "_"))
+    assert spark.read.parquet(b).count() == 5
+    assert len(calls) == 1  # second call served from the staged zone
 
 
 def _backdate(*paths, age_s: float = 7200.0) -> None:
@@ -74,21 +96,149 @@ def test_prune_stale_siblings(tmp_path):
     staging.prune_stale_siblings(str(tmp_path / "nope"), "x_", "x_1")
 
 
-def test_stage_raw_prunes_superseded_fingerprints(spark, tmp_path):
-    """stage_raw(prune_prefix=...) removes the older fingerprint's
-    staged copy after a fresh build (once it ages past the live-reader
-    guard)."""
+def test_stage_prunes_superseded_fingerprints(tmp_path, monkeypatch):
+    """A testdata refresh (new source mtime+size) builds a new stage and
+    prunes the old fingerprint's copy once it ages past the live-reader
+    guard."""
     import os
 
-    def fetch():
-        return spark.range(3).selectExpr("id")
+    sf = _tiny_sf(tmp_path)
+    root = _stage_root_in(tmp_path, monkeypatch)
+    src = os.path.join(sf, "t.parquet")
 
-    staging.stage_raw(spark, fetch, str(tmp_path), "fam_a_100_1",
-                      prune_prefix="fam_a_")
-    _backdate(tmp_path / "fam_a_100_1")
-    staging.stage_raw(spark, fetch, str(tmp_path), "fam_a_200_2",
-                      prune_prefix="fam_a_")
-    assert sorted(os.listdir(tmp_path)) == ["fam_a_200_2"]
+    def build(dest):
+        with open(os.path.join(dest, "rows"), "w") as fh:
+            fh.write("x")
+
+    os.utime(src, (1000, 1000))
+    old = staging.stage(sf, "fam", ["t"], build)
+    _backdate(old)
+    os.utime(src, (2000, 2000))
+    new = staging.stage(sf, "fam", ["t"], build)
+    assert new != old
+    assert os.listdir(root) == [os.path.basename(new)]
+
+
+def test_stage_prune_prefix_keeps_families(tmp_path, monkeypatch):
+    """The prune prefix is built from the family and the sf basename, so
+    underscores inside the basename (opr_sf10) cannot confuse it: other
+    families, other sf dirs and the kept stage survive, a stale
+    fingerprint of the same family goes, and a RECENT superseded
+    sibling survives the live-reader guard until it ages out (pruning
+    runs on cache hits too)."""
+    import os
+
+    sf = _tiny_sf(tmp_path, "opr_sf10")
+    root = _stage_root_in(tmp_path, monkeypatch)
+    os.makedirs(root)
+    stale = os.path.join(root, "fam_opr_sf10_100_1.stage")
+    other_fam = os.path.join(root, "neardup_opr_sf10_100_1.stage")
+    other_sf = os.path.join(root, "fam_opr_sf100_100_1.stage")
+    for d in (stale, other_fam, other_sf):
+        os.mkdir(d)
+    _backdate(stale, other_fam, other_sf)
+    keep = staging.stage(sf, "fam", ["t"], lambda dest: None)
+    assert sorted(os.listdir(root)) == sorted(
+        os.path.basename(p) for p in (keep, other_fam, other_sf))
+    recent = os.path.join(root, "fam_opr_sf10_150_9.stage")
+    os.mkdir(recent)
+    staging.stage(sf, "fam", ["t"], lambda dest: None)
+    assert os.path.isdir(recent)
+    _backdate(recent)
+    staging.stage(sf, "fam", ["t"], lambda dest: None)
+    assert not os.path.exists(recent) and os.path.isdir(keep)
+
+
+def test_stage_torn_build_is_never_served(spark, sf_dir, tmp_path,
+                                          monkeypatch):
+    """s17's build dies after writing a truncated batch_b.parquet (ENOSPC
+    or a kill mid-write): nothing may appear under the stage's final
+    name, and the next call must rebuild instead of adopting the torn
+    file."""
+    import os
+
+    import pyarrow.parquet as pq
+    import pytest
+
+    from openplacereviews_db_spark.plans.sync_plans import (
+        s17_schema_evolution)
+
+    root = _stage_root_in(tmp_path, monkeypatch)
+    real = pq.write_table
+
+    def torn(table, where, **kw):
+        if str(where).endswith("batch_b.parquet"):
+            with open(where, "wb") as fh:
+                fh.write(b"PAR1")
+            raise OSError("No space left on device")
+        return real(table, where, **kw)
+
+    monkeypatch.setattr(pq, "write_table", torn)
+    with pytest.raises(OSError):
+        s17_schema_evolution(spark, sf_dir)
+    assert os.listdir(root) == []  # no final stage, no temp sibling
+    monkeypatch.setattr(pq, "write_table", real)
+    got = s17_schema_evolution(spark, sf_dir).collect()
+    n_events = pq.read_metadata(os.path.join(sf_dir, "events.parquet")).num_rows
+    assert sum(r["n_rows"] for r in got) == n_events
+    path = staging.stage_path(sf_dir, "schema_evo", ["events"])
+    assert sorted(os.listdir(path)) == ["batch_a.parquet", "batch_b.parquet"]
+
+
+def test_stage_concurrent_builders_agree(tmp_path, monkeypatch):
+    """Threads stage the same name with a slow build, all inside
+    ``build`` at once: every caller returns the same path, it holds
+    exactly one complete build, the losers' copies are gone, and no
+    caller raises."""
+    import os
+    import sys
+    import threading
+    import time
+
+    sf = _tiny_sf(tmp_path)
+    root = _stage_root_in(tmp_path, monkeypatch)
+    n = 8
+    all_building = threading.Barrier(n)
+
+    def build(dest):
+        all_building.wait(timeout=30)
+        for i in range(3):
+            with open(os.path.join(dest, f"part{i}"), "w") as fh:
+                fh.write(threading.current_thread().name)
+            time.sleep(0.05)
+
+    paths, errors = {}, []
+
+    def run():
+        try:
+            paths[threading.current_thread().name] = staging.stage(
+                sf, "fam", ["t"], build)
+        except Exception as ex:  # surfaced by the assert below
+            errors.append(ex)
+
+    threads = [threading.Thread(target=run, name=f"t{i}") for i in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(paths) == n and len(set(paths.values())) == 1
+    path = paths["t0"]
+    assert sorted(os.listdir(path)) == ["part0", "part1", "part2"]
+
+    def writer(name):
+        with open(os.path.join(path, name)) as fh:
+            return fh.read()
+
+    # one build's files, never a mix
+    assert len({writer(f) for f in os.listdir(path)}) == 1
+    assert os.listdir(root) == [os.path.basename(path)]
 
 
 def test_split_factors_schedule():
@@ -334,7 +484,6 @@ def test_dup_group_knobs_single_source(spark, sf_dir, monkeypatch):
     import glob
     import os
     import shutil
-    import tempfile
 
     from openplacereviews_db_spark.plans import corpus
 
@@ -349,8 +498,8 @@ def test_dup_group_knobs_single_source(spark, sf_dir, monkeypatch):
     assert (corpus._knobs_cid({"num_hashes": 16})
             != corpus._knobs_cid({"norm_h": 16}))
 
-    stage_root = os.path.join(tempfile.gettempdir(), "opr_spark_stage")
-    pattern = os.path.join(stage_root, f"dupgroups_*_{flip_frag}_*")
+    pattern = os.path.join(staging.stage_root(),
+                           f"dupgroups_*_{flip_frag}_*")
     for d in glob.glob(pattern):
         shutil.rmtree(d, ignore_errors=True)
     monkeypatch.setattr(corpus, "_DUP_GROUP_KNOBS", flipped)
